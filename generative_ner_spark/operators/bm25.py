@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from generative_ner_spark.operators.cache import cache_scope
 from generative_ner_spark.operators.tfidf import term_frequencies
 
 
@@ -172,14 +173,13 @@ def write_bm25_index(df: DataFrame, path: str, id_col: str = "doc_id",
     # the postings write) across TWO actions — persist it or the
     # tokenize+shuffle aggregation re-runs per action (a full duplicate
     # corpus pass at the scale this index exists for)
-    tf = term_frequencies(df, id_col, text_col).persist()
-    dl = doc_lengths(tf)
-    meta = df.select(F.count("*")).crossJoin(
-        tf.select(F.coalesce(F.sum("tf"), F.lit(0)))).first()
-    postings = tf.join(dl, "id").withColumn(
-        "_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-    postings.write.partitionBy("_bucket").mode("overwrite").parquet(path)
-    tf.unpersist()
+    with cache_scope() as keep:
+        tf = keep(term_frequencies(df, id_col, text_col))
+        meta = df.select(F.count("*")).crossJoin(
+            tf.select(F.coalesce(F.sum("tf"), F.lit(0)))).first()
+        postings = tf.join(doc_lengths(tf), "id").withColumn(
+            "_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
+        postings.write.partitionBy("_bucket").mode("overwrite").parquet(path)
     manifest = {"n_docs": int(meta[0]), "total_tokens": int(meta[1]),
                 "n_buckets": n_buckets, "id_col": id_col}
     with open(os.path.join(path, _MANIFEST), "w") as f:

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from generative_ner_spark.operators.cache import cache_scope
+
 
 def with_shingles(df: DataFrame, name_col: str = "name", n: int = 3,
                   out: str = "shingles") -> DataFrame:
@@ -231,48 +233,44 @@ def capped_self_join_pairs(
     "capped_rows"} — the reported recall loss of the cap.
     """
     keys = list(bucket_cols)
-    counts = None
-    if max_bucket is None:
-        # cap disabled (oracle-replay callers lift it): skip the
-        # occupancy aggregate + join entirely — one less job and one
-        # less exchange per pair stage (r6)
-        if metrics is not None:
-            metrics["capped_buckets"] = 0
-            metrics["capped_rows"] = 0
-        capped = rows
-    else:
-        counts = rows.groupBy(*keys).agg(
-            F.count("*").alias("_bc")).persist()
-        if metrics is not None:
-            over = (
-                counts.where(F.col("_bc") > max_bucket)
-                .agg(F.count("*").alias("b"),
-                     F.coalesce(F.sum("_bc"), F.lit(0)).alias("r"))
-                .first()
-            )
-            metrics["capped_buckets"] = over["b"]
-            metrics["capped_rows"] = int(over["r"])
-        capped = rows.join(counts.where(F.col("_bc") <= max_bucket), keys)
-    left = capped.select(
-        *keys, F.col(id_col).alias("a"),
-        *[F.col(p).alias(f"{p}_a") for p in payload_cols],
-    )
-    right = capped.select(
-        *keys, F.col(id_col).alias("b"),
-        *[F.col(p).alias(f"{p}_b") for p in payload_cols],
-    )
-    pairs = (
-        left.join(right, keys)
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b",
-                *[f"{p}_a" for p in payload_cols],
-                *[f"{p}_b" for p in payload_cols])
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint()  # eager: materialize candidates once
-    )
-    if counts is not None:
-        counts.unpersist()
-    return pairs
+    with cache_scope() as keep:
+        if max_bucket is None:
+            # cap disabled (oracle-replay callers lift it): skip the
+            # occupancy aggregate + join entirely — one less job and one
+            # less exchange per pair stage (r6)
+            if metrics is not None:
+                metrics["capped_buckets"] = 0
+                metrics["capped_rows"] = 0
+            capped = rows
+        else:
+            counts = keep(rows.groupBy(*keys).agg(F.count("*").alias("_bc")))
+            if metrics is not None:
+                over = (
+                    counts.where(F.col("_bc") > max_bucket)
+                    .agg(F.count("*").alias("b"),
+                         F.coalesce(F.sum("_bc"), F.lit(0)).alias("r"))
+                    .first()
+                )
+                metrics["capped_buckets"] = over["b"]
+                metrics["capped_rows"] = int(over["r"])
+            capped = rows.join(counts.where(F.col("_bc") <= max_bucket), keys)
+        left = capped.select(
+            *keys, F.col(id_col).alias("a"),
+            *[F.col(p).alias(f"{p}_a") for p in payload_cols],
+        )
+        right = capped.select(
+            *keys, F.col(id_col).alias("b"),
+            *[F.col(p).alias(f"{p}_b") for p in payload_cols],
+        )
+        return (
+            left.join(right, keys)
+            .where(F.col("a") < F.col("b"))
+            .select("a", "b",
+                    *[f"{p}_a" for p in payload_cols],
+                    *[f"{p}_b" for p in payload_cols])
+            .dropDuplicates(["a", "b"])
+            .localCheckpoint()  # eager: materialize candidates once
+        )
 
 
 def shingle_band_rows(
@@ -291,7 +289,8 @@ def shingle_band_rows(
     ``shingles`` is the document's sorted DISTINCT full-width
     shingle-hash set (array<long>; r6 — set identity by hash, ~2^-60
     per-pair collision odds), banding rows (id, band, band_hash)). The
-    CALLER owns the shingle cache — unpersist it once its pair set /
+    CALLER owns the shingle cache (it outlives this call): ``keep`` it in
+    the caller's ``cache_scope``, which releases it once its pair set /
     index write is materialized.
 
     SLIM banding rows: (id, band, band_hash) only. Carrying the shingle
@@ -385,33 +384,30 @@ def lsh_candidate_pairs(
     consumers (connected components' multi-pass loop) never re-run the
     blocking plan.
     """
-    if k % bands != 0:
-        raise ValueError(
-            f"k={k} not divisible by bands={bands}: the banding would "
-            f"silently ignore the last {k - bands * (k // bands)} minhash "
-            f"slots and the effective S-curve would differ from the "
-            f"requested (k, bands) tuning")
-    sh, banded = shingle_band_rows(entities, id_col, name_col, k=k,
-                                   bands=bands, n=n,
-                                   hash_family=hash_family, scheme=scheme)
-    # cap pathological buckets (hot shingle patterns) — bounded pair blowup
-    pairs = capped_self_join_pairs(
-        banded, ("band", "band_hash"), "id", max_bucket, metrics)
-    verified = (
-        pairs
-        .join(sh.select(F.col("id").alias("a"), F.col("shingles").alias("sh_a")), "a")
-        .join(sh.select(F.col("id").alias("b"), F.col("shingles").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
+    with cache_scope() as keep:
+        sh, banded = shingle_band_rows(entities, id_col, name_col, k=k,
+                                       bands=bands, n=n,
+                                       hash_family=hash_family, scheme=scheme)
+        keep(sh)  # adopt the shingle cache shingle_band_rows persisted
+        # cap pathological buckets (hot shingle patterns) — bounded pair
+        # blowup
+        pairs = capped_self_join_pairs(
+            banded, ("band", "band_hash"), "id", max_bucket, metrics)
+        return (
+            pairs
+            .join(sh.select(F.col("id").alias("a"),
+                            F.col("shingles").alias("sh_a")), "a")
+            .join(sh.select(F.col("id").alias("b"),
+                            F.col("shingles").alias("sh_b")), "b")
+            .withColumn(
+                "jaccard",
+                F.size(F.array_intersect("sh_a", "sh_b"))
+                / F.size(F.array_union("sh_a", "sh_b")),
+            )
+            .where(F.col("jaccard") >= jaccard_threshold)
+            .select("a", "b", "jaccard")
+            .localCheckpoint()  # eager: materialize pairs once
         )
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", "jaccard")
-    )
-    verified = verified.localCheckpoint()  # eager: materialize pairs once
-    sh.unpersist()  # shingle cache no longer needed — don't leak it
-    return verified
 
 
 def _large_star(e_sym: DataFrame) -> DataFrame:
@@ -474,7 +470,9 @@ def connected_components(
       directly at its component's minimum node.
 
     ``stats`` (optional dict) receives {"rounds": int, "converged": bool,
-    "regime": "driver"|"distributed"}.
+    "regime": "driver"|"distributed"}. Callers with duplicate-heavy
+    edge inputs should deduplicate them first: round 1 pays the
+    duplicate fan-out.
     """
     spark = edges.sparkSession
     # materialize ONCE up front: the regime-selecting count plus either

@@ -47,6 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cache import cache_scope
 from .canonicalize import capped_self_join_pairs
 from .quality import _md5_rank
 from .similarity import cosine_col
@@ -117,44 +118,44 @@ def kmeans_fit(
     module docstring. Seeding: the k rows with the smallest
     md5(salt:id) rank — deterministic, order-independent, and O(k)
     driver memory (TakeOrderedAndProject, not a sort-the-corpus)."""
-    normed = df.select(
-        F.col(id_col).alias("_id"),
-        _normalize_udf(dim)(F.col(vec_col)).alias("_v"),
-    ).persist()
-    seed_rows = (
-        normed.orderBy(_md5_rank(F.col("_id"), salt), F.col("_id"))
-        .limit(k).collect()
-    )
-    if not seed_rows:
-        normed.unpersist()
-        raise ValueError("kmeans_fit: empty input")
-    C = np.asarray([r["_v"] for r in seed_rows], dtype=np.float64)
-    if C.shape[0] < k:  # fewer rows than cells: pad by repeating row 0
-        C = np.vstack([C, np.repeat(C[:1], k - C.shape[0], axis=0)])
-    for _ in range(iters):
-        assigned = normed.select(
-            _assign_udf(C)(F.col("_v")).alias("_cell"),
-            F.posexplode("_v").alias("pos", "x"),
+    with cache_scope() as keep:
+        normed = keep(df.select(
+            F.col(id_col).alias("_id"),
+            _normalize_udf(dim)(F.col(vec_col)).alias("_v"),
+        ))
+        seed_rows = (
+            normed.orderBy(_md5_rank(F.col("_id"), salt), F.col("_id"))
+            .limit(k).collect()
         )
-        # one aggregate: partial (map-side) combine caps each task's shuffle
-        # output at k*dim rows; count(*) per (cell,pos) == cell size
-        parts = (
-            assigned.groupBy("_cell", "pos")
-            .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        newC = C.copy()
-        sums = np.zeros((k, dim))
-        counts = np.zeros(k, dtype=np.int64)
-        for r in parts:
-            sums[r["_cell"], r["pos"]] = r["s"]
-            counts[r["_cell"]] = r["n"]
-        nonempty = counts > 0
-        newC[nonempty] = sums[nonempty] / counts[nonempty, None]
-        norms = np.linalg.norm(newC, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        C = newC / norms
-    normed.unpersist()
+        if not seed_rows:
+            raise ValueError("kmeans_fit: empty input")
+        C = np.asarray([r["_v"] for r in seed_rows], dtype=np.float64)
+        if C.shape[0] < k:  # fewer rows than cells: pad by repeating row 0
+            C = np.vstack([C, np.repeat(C[:1], k - C.shape[0], axis=0)])
+        for _ in range(iters):
+            assigned = normed.select(
+                _assign_udf(C)(F.col("_v")).alias("_cell"),
+                F.posexplode("_v").alias("pos", "x"),
+            )
+            # one aggregate: partial (map-side) combine caps each task's
+            # shuffle output at k*dim rows; count(*) per (cell,pos) == cell
+            # size
+            parts = (
+                assigned.groupBy("_cell", "pos")
+                .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
+                .collect()
+            )
+            newC = C.copy()
+            sums = np.zeros((k, dim))
+            counts = np.zeros(k, dtype=np.int64)
+            for r in parts:
+                sums[r["_cell"], r["pos"]] = r["s"]
+                counts[r["_cell"]] = r["n"]
+            nonempty = counts > 0
+            newC[nonempty] = sums[nonempty] / counts[nonempty, None]
+            norms = np.linalg.norm(newC, axis=1, keepdims=True)
+            norms[norms == 0.0] = 1.0
+            C = newC / norms
     return KMeansModel(centroids=C, vec_col=vec_col)
 
 
@@ -191,26 +192,26 @@ def semantic_dedup(
     """
     model = kmeans_fit(embeddings, dim, k=k, iters=iters,
                        id_col=id_col, vec_col=vec_col)
-    cells = model.assign(
-        embeddings.select(id_col, vec_col), out_col="_cell"
-    ).persist()
-    pairs = capped_self_join_pairs(
-        cells.select(F.col(id_col).alias("id"), "_cell"),
-        bucket_cols=("_cell",), max_bucket=max_bucket, metrics=metrics,
-    )
-    va = cells.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
-    vb = cells.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
-    dropped = (
-        pairs.join(va, "a").join(vb, "b")
-        .where(cosine_col(F.col("_va"), F.col("_vb"), dim)
-               >= F.lit(float(cosine_threshold)))
-        .select(F.col("b").alias(id_col))
-        .distinct()
-        .withColumn("_dropped", F.lit(True))
-    )
-    out = cells.select(id_col).join(dropped, id_col, "left").select(
-        id_col, F.col("_dropped").isNull().alias("kept")
-    )
-    result = out.localCheckpoint()  # pin before releasing the cache
-    cells.unpersist()
-    return result
+    with cache_scope() as keep:
+        cells = keep(model.assign(
+            embeddings.select(id_col, vec_col), out_col="_cell"
+        ))
+        pairs = capped_self_join_pairs(
+            cells.select(F.col(id_col).alias("id"), "_cell"),
+            bucket_cols=("_cell",), max_bucket=max_bucket, metrics=metrics,
+        )
+        va = cells.select(F.col(id_col).alias("a"),
+                          F.col(vec_col).alias("_va"))
+        vb = cells.select(F.col(id_col).alias("b"),
+                          F.col(vec_col).alias("_vb"))
+        dropped = (
+            pairs.join(va, "a").join(vb, "b")
+            .where(cosine_col(F.col("_va"), F.col("_vb"), dim)
+                   >= F.lit(float(cosine_threshold)))
+            .select(F.col("b").alias(id_col))
+            .distinct()
+            .withColumn("_dropped", F.lit(True))
+        )
+        return cells.select(id_col).join(dropped, id_col, "left").select(
+            id_col, F.col("_dropped").isNull().alias("kept")
+        ).localCheckpoint()

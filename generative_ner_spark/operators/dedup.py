@@ -23,8 +23,11 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from generative_ner_spark.operators.cache import cache_scope
 from generative_ner_spark.operators.canonicalize import (
+    capped_self_join_pairs,
     lsh_candidate_pairs,
+    shingle_band_rows,
     with_shingles,
 )
 from generative_ner_spark.operators.quality import fingerprint_col
@@ -243,40 +246,35 @@ def simhash_near_dup_pairs(
     chunk_bits = width // 4
     chunk_mask = (1 << chunk_bits) - 1
     # signatures feed three plan branches (bucket counts + both join
-    # sides): persist so the 64-aggregate signature pass runs ONCE, and
-    # eagerly materialize the pair set below before unpersisting — the
-    # same lifecycle as canonicalize.lsh_candidate_pairs
-    # NULL text -> '' (same contract as the minhash path and exact dedup):
-    # a NULL simhash would be silently dropped by the NULL-key joins below,
-    # so two NULL-text docs would never pair while ''-text docs all do
-    sh = with_simhash(
-        df.select(F.col(id_col).alias("id"),
-                  F.coalesce(F.col(text_col), F.lit("")).alias(text_col)),
-        text_col, hash_family=hash_family,
-    ).select("id", "simhash").persist()
-    chunks = sh.select(
-        "id",
-        "simhash",
-        F.posexplode(
-            F.array(*[
-                F.shiftright(F.col("simhash"), chunk_bits * j)
-                .bitwiseAND(F.lit(chunk_mask))
-                .alias(f"c{j}")
-                for j in range(4)
-            ])
-        ).alias("chunk_idx", "chunk"),
-    )
-    # persisted: with metrics requested the counts agg would otherwise run
-    # twice (once for the .first() metrics job, again inside the join)
-    from generative_ner_spark.operators.canonicalize import (
-        capped_self_join_pairs,
-    )
-
-    cand = capped_self_join_pairs(
-        chunks, ("chunk_idx", "chunk"), "id", max_bucket, metrics,
-        payload_cols=("simhash",),
-    )
-    sh.unpersist()  # candidates are materialized; signature cache done
+    # sides): persist so the 64-aggregate signature pass runs ONCE; the
+    # pair set is materialized inside the scope — the same lifecycle as
+    # canonicalize.lsh_candidate_pairs
+    with cache_scope() as keep:
+        # NULL text -> '' (same contract as the minhash path and exact
+        # dedup): a NULL simhash would be silently dropped by the NULL-key
+        # joins below, so two NULL-text docs would never pair while
+        # ''-text docs all do
+        sh = keep(with_simhash(
+            df.select(F.col(id_col).alias("id"),
+                      F.coalesce(F.col(text_col), F.lit("")).alias(text_col)),
+            text_col, hash_family=hash_family,
+        ).select("id", "simhash"))
+        chunks = sh.select(
+            "id",
+            "simhash",
+            F.posexplode(
+                F.array(*[
+                    F.shiftright(F.col("simhash"), chunk_bits * j)
+                    .bitwiseAND(F.lit(chunk_mask))
+                    .alias(f"c{j}")
+                    for j in range(4)
+                ])
+            ).alias("chunk_idx", "chunk"),
+        )
+        cand = capped_self_join_pairs(
+            chunks, ("chunk_idx", "chunk"), "id", max_bucket, metrics,
+            payload_cols=("simhash",),
+        )
     return (
         cand
         .withColumn("hamming", F.bit_count(
@@ -498,40 +496,22 @@ def write_minhash_index(
     import json
     import os
 
-    from generative_ner_spark.operators.canonicalize import (
-        shingle_band_rows,
-    )
-
     spark = df.sparkSession
-    sh, banded = shingle_band_rows(
-        df, id_col, text_col, k=k, bands=bands, n=shingle_n,
-        hash_family=hash_family, scheme=scheme,
-    )
-    if max_bucket is not None:
-        # deterministic keep set (smallest ids); one slim window shuffle
-        # at build time buys map-side probes forever
-        w = Window.partitionBy("band", "band_hash").orderBy("id")
-        banded = (banded
-                  .withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") <= max_bucket).drop("_rn"))
     banding_path = os.path.join(path, "banding")
-    # repartition by the layout key before the partitioned write (guide
-    # §6 file sizing): without it every upstream task writes a sliver
-    # into every bucket directory — tasks x n_buckets tiny files whose
-    # open/commit overhead dominates the write locally and poisons every
-    # later probe's listing at scale; with it each bucket is one file
-    (banded
-     .withColumn("_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets)))
-     .repartition(F.col("_bkt"))
-     .write.partitionBy("_bkt").mode("overwrite")
-     .parquet(banding_path))
-    (sh
-     .withColumn("_sbkt", F.pmod(F.xxhash64(F.col("id").cast("string")),
-                                 F.lit(n_buckets)))
-     .repartition(F.col("_sbkt"))
-     .write.partitionBy("_sbkt").mode("overwrite")
-     .parquet(os.path.join(path, "shingles")))
-    sh.unpersist()
+    with cache_scope() as keep:
+        sh, banded = shingle_band_rows(
+            df, id_col, text_col, k=k, bands=bands, n=shingle_n,
+            hash_family=hash_family, scheme=scheme,
+        )
+        keep(sh)
+        if max_bucket is not None:
+            # deterministic keep set (smallest ids); one slim window
+            # shuffle at build time buys map-side probes forever
+            w = Window.partitionBy("band", "band_hash").orderBy("id")
+            banded = (banded
+                      .withColumn("_rn", F.row_number().over(w))
+                      .where(F.col("_rn") <= max_bucket).drop("_rn"))
+        _write_minhash_layout(sh, banded, path, n_buckets, "overwrite")
     n_capped = 0
     if max_bucket is not None:
         # both counts are parquet-metadata reads over the just-written
@@ -576,31 +556,41 @@ def append_to_minhash_index(
     import json
     import os
 
-    from generative_ner_spark.operators.canonicalize import (
-        shingle_band_rows,
-    )
-
     with open(os.path.join(path, "_minhash_manifest.json")) as f:
         m = json.load(f)
-    sh, banded = shingle_band_rows(
-        new_df, m["id_col"], m["text_col"], k=m["k"], bands=m["bands"],
-        n=m["shingle_n"], hash_family=m["hash_family"], scheme=m["scheme"],
-    )
-    n_buckets = m["n_buckets"]
-    # same pre-write repartition as write_minhash_index: one file per
-    # touched bucket per append instead of tasks x buckets slivers
+    with cache_scope() as keep:
+        sh, banded = shingle_band_rows(
+            new_df, m["id_col"], m["text_col"], k=m["k"], bands=m["bands"],
+            n=m["shingle_n"], hash_family=m["hash_family"],
+            scheme=m["scheme"],
+        )
+        keep(sh)
+        _write_minhash_layout(sh, banded, path, m["n_buckets"], "append")
+
+
+def _write_minhash_layout(sh: DataFrame, banded: DataFrame, path: str,
+                          n_buckets: int, mode: str) -> None:
+    """Write banding rows and shingle sets in the bucket-partitioned
+    index layout (``banding/`` by ``_bkt``, ``shingles/`` by ``_sbkt``).
+    Each side is repartitioned by its layout key before the partitioned
+    write (guide §6 file sizing): without it every upstream task writes a
+    sliver into every bucket directory — tasks x n_buckets tiny files
+    whose open/commit overhead dominates the write locally and poisons
+    every later probe's listing at scale; with it each bucket is one
+    file, on the first write and on every append."""
+    import os
+
     (banded
      .withColumn("_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets)))
      .repartition(F.col("_bkt"))
-     .write.partitionBy("_bkt").mode("append")
+     .write.partitionBy("_bkt").mode(mode)
      .parquet(os.path.join(path, "banding")))
     (sh
      .withColumn("_sbkt", F.pmod(F.xxhash64(F.col("id").cast("string")),
                                  F.lit(n_buckets)))
      .repartition(F.col("_sbkt"))
-     .write.partitionBy("_sbkt").mode("append")
+     .write.partitionBy("_sbkt").mode(mode)
      .parquet(os.path.join(path, "shingles")))
-    sh.unpersist()
 
 
 def dedup_against_index(
@@ -642,10 +632,6 @@ def dedup_against_index(
     import json
     import os
 
-    from generative_ner_spark.operators.canonicalize import (
-        shingle_band_rows,
-    )
-
     spark = new_df.sparkSession
     with open(os.path.join(path, "_minhash_manifest.json")) as f:
         m = json.load(f)
@@ -656,75 +642,74 @@ def dedup_against_index(
             "this build verifies against full-width hash sets "
             "('hash64') — rebuild the index with write_minhash_index")
     n_buckets = m["n_buckets"]
-    sh_new, banded_new = shingle_band_rows(
-        new_df, id_col, text_col, k=m["k"], bands=m["bands"],
-        n=m["shingle_n"], hash_family=m["hash_family"], scheme=m["scheme"],
-    )
-    banded_new = banded_new.withColumn(
-        "_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets))).persist()
-    small = (
-        new_df.select(id_col).limit(max_broadcast_batch_rows + 1).count()
-        <= max_broadcast_batch_rows
-    )
-    if metrics is not None:
-        metrics["broadcast_regime"] = small
-    corpus_banding = spark.read.parquet(os.path.join(path, "banding"))
-    new_slim = banded_new.select(
-        F.col("id").alias("b"), "band", "band_hash", "_bkt")
-    if small:
-        # distinct buckets the batch touches: <= n_buckets values,
-        # driver-safe collect; partition filter -> FILE pruning
-        bkts = [r["_bkt"]
-                for r in banded_new.select("_bkt").distinct().collect()]
-        corpus_banding = corpus_banding.where(F.col("_bkt").isin(bkts))
-        new_slim = F.broadcast(new_slim)
-    cand = (
-        corpus_banding.join(new_slim, ["band", "band_hash", "_bkt"])
-        .select(F.col("id").alias("a"), "b")
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint()  # materialize: feeds bucket listing + verify
-    )
-    if metrics is not None:
-        metrics["n_candidates"] = cand.count()
-    # candidate CORPUS ids -> their shingle buckets (driver-sized: one
-    # int per bucket, <= n_buckets) -> pruned shingle fetch
-    sbkts = [
-        r["_sb"]
-        for r in cand.select(
-            F.pmod(F.xxhash64(F.col("a").cast("string")),
-                   F.lit(n_buckets)).alias("_sb")).distinct().collect()
-    ]
-    corpus_sh = (
-        spark.read.parquet(os.path.join(path, "shingles"))
-        .where(F.col("_sbkt").isin(sbkts))
-        .select(F.col("id").alias("a"), F.col("shingles").alias("sh_a"))
-    )
-    sh_new_slim = sh_new.select(F.col("id").alias("b"),
-                                F.col("shingles").alias("sh_b"))
-    # no FORCED broadcast here: the row-count `small` gate bounds the
-    # partition-pruning collect above, but this frame carries the
-    # batch's SHINGLE ARRAYS, whose bytes scale with batch text (a
-    # 90k-doc batch of 4 KB pages is multi-GB — past Spark's broadcast
-    # hard limit even though the row gate passes). AQE picks broadcast
-    # from actual runtime bytes when it genuinely fits.
-    dup_new = (
-        cand.join(corpus_sh, "a")
-        .join(sh_new_slim, "b")
-        .where(
-            (F.size(F.array_intersect("sh_a", "sh_b"))
-             / F.size(F.array_union("sh_a", "sh_b")))
-            >= F.lit(m["jaccard_threshold"]))
-        .select(F.col("b").alias(id_col))
-        .distinct()
-        .localCheckpoint()
-    )
-    if metrics is not None:
-        metrics["n_dup_new_ids"] = dup_new.count()
-    out = new_df.join(dup_new, id_col, "left_anti")
-    out = out.localCheckpoint()  # pin before releasing the caches
-    banded_new.unpersist()
-    sh_new.unpersist()
-    return out
+    with cache_scope() as keep:
+        sh_new, banded_new = shingle_band_rows(
+            new_df, id_col, text_col, k=m["k"], bands=m["bands"],
+            n=m["shingle_n"], hash_family=m["hash_family"],
+            scheme=m["scheme"],
+        )
+        keep(sh_new)
+        banded_new = keep(banded_new.withColumn(
+            "_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets))))
+        small = (
+            new_df.select(id_col).limit(max_broadcast_batch_rows + 1).count()
+            <= max_broadcast_batch_rows
+        )
+        if metrics is not None:
+            metrics["broadcast_regime"] = small
+        corpus_banding = spark.read.parquet(os.path.join(path, "banding"))
+        new_slim = banded_new.select(
+            F.col("id").alias("b"), "band", "band_hash", "_bkt")
+        if small:
+            # distinct buckets the batch touches: <= n_buckets values,
+            # driver-safe collect; partition filter -> FILE pruning
+            bkts = [r["_bkt"]
+                    for r in banded_new.select("_bkt").distinct().collect()]
+            corpus_banding = corpus_banding.where(F.col("_bkt").isin(bkts))
+            new_slim = F.broadcast(new_slim)
+        cand = (
+            corpus_banding.join(new_slim, ["band", "band_hash", "_bkt"])
+            .select(F.col("id").alias("a"), "b")
+            .dropDuplicates(["a", "b"])
+            .localCheckpoint()  # materialize: feeds bucket listing + verify
+        )
+        if metrics is not None:
+            metrics["n_candidates"] = cand.count()
+        # candidate CORPUS ids -> their shingle buckets (driver-sized: one
+        # int per bucket, <= n_buckets) -> pruned shingle fetch
+        sbkts = [
+            r["_sb"]
+            for r in cand.select(
+                F.pmod(F.xxhash64(F.col("a").cast("string")),
+                       F.lit(n_buckets)).alias("_sb")).distinct().collect()
+        ]
+        corpus_sh = (
+            spark.read.parquet(os.path.join(path, "shingles"))
+            .where(F.col("_sbkt").isin(sbkts))
+            .select(F.col("id").alias("a"), F.col("shingles").alias("sh_a"))
+        )
+        sh_new_slim = sh_new.select(F.col("id").alias("b"),
+                                    F.col("shingles").alias("sh_b"))
+        # no FORCED broadcast here: the row-count `small` gate bounds the
+        # partition-pruning collect above, but this frame carries the
+        # batch's SHINGLE ARRAYS, whose bytes scale with batch text (a
+        # 90k-doc batch of 4 KB pages is multi-GB — past Spark's broadcast
+        # hard limit even though the row gate passes). AQE picks broadcast
+        # from actual runtime bytes when it genuinely fits.
+        dup_new = (
+            cand.join(corpus_sh, "a")
+            .join(sh_new_slim, "b")
+            .where(
+                (F.size(F.array_intersect("sh_a", "sh_b"))
+                 / F.size(F.array_union("sh_a", "sh_b")))
+                >= F.lit(m["jaccard_threshold"]))
+            .select(F.col("b").alias(id_col))
+            .distinct()
+            .localCheckpoint()
+        )
+        if metrics is not None:
+            metrics["n_dup_new_ids"] = dup_new.count()
+        return new_df.join(dup_new, id_col, "left_anti").localCheckpoint()
 
 
 def duplicate_window_spans(
@@ -770,8 +755,6 @@ def duplicate_window_spans(
     space-joined token slice) — the q54 oracle.
     """
     toks = F.split(F.trim(F.col(text_col)), "[ \t\n\x0b\f\r]+")
-    # persisted: grams feeds BOTH the dup-hash count and the position
-    # semi-join — recomputing would tokenize + hash the corpus twice
     grams = (
         df.where(F.length(F.trim(F.col(text_col))) > 0)
         .select(F.col(id_col).alias("id"), toks.alias("_tk"))
@@ -786,42 +769,44 @@ def duplicate_window_spans(
                 )
             ).alias("i", "h"),
         )
-    ).persist()
-    dups = grams.groupBy("h").count().where(F.col("count") > 1).select("h")
-    if broadcast_dup_hashes:
-        dups = F.broadcast(dups)
-    hits = grams.join(dups, "h", "left_semi").select("id", "i")
-    wd = Window.partitionBy("id").orderBy("i")
-    islands = (
-        hits.withColumn("_prev", F.lag("i").over(wd))
-        .withColumn(
-            "_new",
-            F.when(F.col("_prev").isNull()
-                   | (F.col("i") > F.col("_prev") + w), 1).otherwise(0),
-        )
-        .withColumn(
-            "_isl",
-            F.sum("_new").over(
-                wd.rowsBetween(Window.unboundedPreceding,
-                               Window.currentRow)),
-        )
     )
-    out = (
-        islands.groupBy("id", "_isl")
-        .agg(F.min("i").cast("long").alias("span_start"),
-             (F.max("i") + F.lit(w - 1)).cast("long").alias("span_end"))
-        .select(F.col("id").alias(id_col), "span_start", "span_end")
-    )
-    # pin the (small) span result, then release the corpus-sized grams
-    # cache — without this the exploded gram frame stayed pinned for the
-    # session lifetime (same release discipline as jaccard_set_join).
-    # eager=False hands back the LAZY plan instead (plan inspection /
-    # further composition) and leaves the grams cache for the caller.
-    if not eager:
-        return out
-    out = out.localCheckpoint()
-    grams.unpersist()
-    return out
+    with cache_scope() as keep:
+        # persisted when eager: grams feeds BOTH the dup-hash count and
+        # the position semi-join — recomputing would tokenize + hash the
+        # corpus twice
+        if eager:
+            grams = keep(grams)
+        dups = (grams.groupBy("h").count().where(F.col("count") > 1)
+                .select("h"))
+        if broadcast_dup_hashes:
+            dups = F.broadcast(dups)
+        hits = grams.join(dups, "h", "left_semi").select("id", "i")
+        wd = Window.partitionBy("id").orderBy("i")
+        islands = (
+            hits.withColumn("_prev", F.lag("i").over(wd))
+            .withColumn(
+                "_new",
+                F.when(F.col("_prev").isNull()
+                       | (F.col("i") > F.col("_prev") + w), 1).otherwise(0),
+            )
+            .withColumn(
+                "_isl",
+                F.sum("_new").over(
+                    wd.rowsBetween(Window.unboundedPreceding,
+                                   Window.currentRow)),
+            )
+        )
+        out = (
+            islands.groupBy("id", "_isl")
+            .agg(F.min("i").cast("long").alias("span_start"),
+                 (F.max("i") + F.lit(w - 1)).cast("long").alias("span_end"))
+            .select(F.col("id").alias(id_col), "span_start", "span_end")
+        )
+        # eager (default): pin the (small) span result; the scope then
+        # releases the corpus-sized grams cache. eager=False hands back the
+        # LAZY plan over UNCACHED grams instead (plan inspection / further
+        # composition) — no cache outlives the call either way.
+        return out.localCheckpoint() if eager else out
 
 
 def jaccard_set_join(
@@ -868,92 +853,90 @@ def jaccard_set_join(
     # lossless under ANY consistent global order, so ordering by
     # (df, hash) instead of (df, string) only changes WHICH candidates
     # are generated, never which pairs verify.
-    sh = (
-        df.select(F.col(id_col).alias("_id"), toks.alias("_tk"))
-        .where(F.size("_tk") >= shingle_n)
-        .select(
-            "_id",
-            F.explode(F.expr(
-                f"transform(sequence(0, size(_tk) - {shingle_n}),"
-                f" i -> xxhash64(array_join(slice(_tk, i + 1, {shingle_n}),"
-                f" ' ')))"
-            )).alias("tok"),
+    with cache_scope() as keep:
+        sh = keep(
+            df.select(F.col(id_col).alias("_id"), toks.alias("_tk"))
+            .where(F.size("_tk") >= shingle_n)
+            .select(
+                "_id",
+                F.explode(F.expr(
+                    f"transform(sequence(0, size(_tk) - {shingle_n}),"
+                    f" i -> xxhash64(array_join(slice(_tk, i + 1, {shingle_n}),"
+                    f" ' ')))"
+                )).alias("tok"),
+            )
+            .distinct()
+        )  # feeds df-rank, sizes, verification arrays
+        # r6b: the document frequency is a COUNT OVER a tok-partitioned
+        # window instead of a separate groupBy + join-back — one exchange of
+        # the shingle rows (by tok) replaces two passes (the dfreq aggregate
+        # AND re-shuffling sh against it); values are identical (count of
+        # distinct (_id, tok) rows per tok IS the df).
+        wdoc = Window.partitionBy("_id")
+        ranked = (
+            sh.withColumn("_df", F.count("*").over(Window.partitionBy("tok")))
+            .withColumn("_pos", F.row_number().over(
+                wdoc.orderBy("_df", "tok")))
+            .withColumn("_n", F.count("*").over(wdoc))
         )
-        .distinct()
-        .persist()  # feeds df-rank, sizes, verification arrays
-    )
-    # r6b: the document frequency is a COUNT OVER a tok-partitioned
-    # window instead of a separate groupBy + join-back — one exchange of
-    # the shingle rows (by tok) replaces two passes (the dfreq aggregate
-    # AND re-shuffling sh against it); values are identical (count of
-    # distinct (_id, tok) rows per tok IS the df).
-    wdoc = Window.partitionBy("_id")
-    ranked = (
-        sh.withColumn("_df", F.count("*").over(Window.partitionBy("tok")))
-        .withColumn("_pos", F.row_number().over(
-            wdoc.orderBy("_df", "tok")))
-        .withColumn("_n", F.count("*").over(wdoc))
-    )
-    # ceil over double t*n can land one too HIGH when the double rep of
-    # t exceeds its decimal (ceil(0.55*100) = 56), shortening the prefix
-    # below what losslessness requires; nudging down by 1e-9 restores the
-    # exact-integer case and can only LENGTHEN the prefix otherwise
-    # (more candidates — never fewer, so never lossy)
-    # materialized ONCE (slim: 4 longs/row) before feeding BOTH sides of
-    # the candidate self-join — the two join sides are separately
-    # re-analyzed plans, so without the checkpoint each side re-ran the
-    # whole df-rank window pass (r6b; the persist on sh bounds that
-    # recompute at the shingle cache, not at the ranked rows)
-    prefix = ranked.where(
-        F.col("_pos")
-        <= F.col("_n") - F.ceil(F.lit(t) * F.col("_n") - F.lit(1e-9)) + 1
-    ).select("tok", "_id", "_n", "_pos").localCheckpoint()
-    # PPJoin POSITIONAL filter (Xiao et al. §3.2, the r6 addition): a pair
-    # matching on shingle w at sorted positions (pa, pb) can share at most
-    # min(pa-1, pb-1) shingles before w, w itself, and min(na-pa, nb-pb)
-    # after it — so bound = min(pa,pb) + min(na-pa, nb-pb); Jaccard >= t
-    # needs overlap >= t/(1+t)*(na+nb). Filtering each joined ROW on the
-    # bound is lossless: a truly-passing pair has EVERY bound >= its true
-    # overlap >= the requirement, so at least one (in fact each) of its
-    # matching rows survives to generate it. On the sf1.0 corpus this
-    # prunes the candidate set from 52M pairs to the near-dup core before
-    # the array-verify joins ever see it (it also subsumes the length
-    # filter: bound <= min(na, nb)).
-    req = F.lit(t / (1.0 + t)) * (F.col("na") + F.col("nb")) - F.lit(1e-9)
-    cand = (
-        prefix.select("tok", F.col("_id").alias("a"),
-                      F.col("_n").alias("na"), F.col("_pos").alias("pa"))
-        .join(prefix.select("tok", F.col("_id").alias("b"),
-                            F.col("_n").alias("nb"),
-                            F.col("_pos").alias("pb")), "tok")
-        .where(F.col("a") < F.col("b"))
-        .where(
-            (F.least("pa", "pb")
-             + F.least(F.col("na") - F.col("pa"),
-                       F.col("nb") - F.col("pb"))) >= req)
-        .select("a", "b", "na", "nb")
-        .distinct()
-    )
-    sets = sh.groupBy("_id").agg(
-        F.sort_array(F.collect_list("tok")).alias("_set"))
-    verified = (
-        cand.join(sets.select(F.col("_id").alias("a"),
-                              F.col("_set").alias("_sa")), "a")
-        .join(sets.select(F.col("_id").alias("b"),
-                          F.col("_set").alias("_sb")), "b")
-        .withColumn("n_common",
-                    F.size(F.array_intersect("_sa", "_sb")).cast("long"))
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_common")))
-        .where(F.col("jaccard") >= t)
-        .select("a", "b", "n_common",
-                F.round("jaccard", round_to).alias("jaccard"))
-    )
-    out = verified.localCheckpoint()
-    sh.unpersist()
-    return out
+        # ceil over double t*n can land one too HIGH when the double rep of
+        # t exceeds its decimal (ceil(0.55*100) = 56), shortening the prefix
+        # below what losslessness requires; nudging down by 1e-9 restores the
+        # exact-integer case and can only LENGTHEN the prefix otherwise
+        # (more candidates — never fewer, so never lossy)
+        # materialized ONCE (slim: 4 longs/row) before feeding BOTH sides of
+        # the candidate self-join — the two join sides are separately
+        # re-analyzed plans, so without the checkpoint each side re-ran the
+        # whole df-rank window pass (r6b; the persist on sh bounds that
+        # recompute at the shingle cache, not at the ranked rows)
+        prefix = ranked.where(
+            F.col("_pos")
+            <= F.col("_n") - F.ceil(F.lit(t) * F.col("_n") - F.lit(1e-9)) + 1
+        ).select("tok", "_id", "_n", "_pos").localCheckpoint()
+        # PPJoin POSITIONAL filter (Xiao et al. §3.2, the r6 addition): a pair
+        # matching on shingle w at sorted positions (pa, pb) can share at most
+        # min(pa-1, pb-1) shingles before w, w itself, and min(na-pa, nb-pb)
+        # after it — so bound = min(pa,pb) + min(na-pa, nb-pb); Jaccard >= t
+        # needs overlap >= t/(1+t)*(na+nb). Filtering each joined ROW on the
+        # bound is lossless: a truly-passing pair has EVERY bound >= its true
+        # overlap >= the requirement, so at least one (in fact each) of its
+        # matching rows survives to generate it. On the sf1.0 corpus this
+        # prunes the candidate set from 52M pairs to the near-dup core before
+        # the array-verify joins ever see it (it also subsumes the length
+        # filter: bound <= min(na, nb)).
+        req = F.lit(t / (1.0 + t)) * (F.col("na") + F.col("nb")) - F.lit(1e-9)
+        cand = (
+            prefix.select("tok", F.col("_id").alias("a"),
+                          F.col("_n").alias("na"), F.col("_pos").alias("pa"))
+            .join(prefix.select("tok", F.col("_id").alias("b"),
+                                F.col("_n").alias("nb"),
+                                F.col("_pos").alias("pb")), "tok")
+            .where(F.col("a") < F.col("b"))
+            .where(
+                (F.least("pa", "pb")
+                 + F.least(F.col("na") - F.col("pa"),
+                           F.col("nb") - F.col("pb"))) >= req)
+            .select("a", "b", "na", "nb")
+            .distinct()
+        )
+        sets = sh.groupBy("_id").agg(
+            F.sort_array(F.collect_list("tok")).alias("_set"))
+        return (
+            cand.join(sets.select(F.col("_id").alias("a"),
+                                  F.col("_set").alias("_sa")), "a")
+            .join(sets.select(F.col("_id").alias("b"),
+                              F.col("_set").alias("_sb")), "b")
+            .withColumn("n_common",
+                        F.size(F.array_intersect("_sa", "_sb")).cast("long"))
+            .withColumn(
+                "jaccard",
+                F.col("n_common").cast("double")
+                / (F.col("na") + F.col("nb") - F.col("n_common")))
+            .where(F.col("jaccard") >= t)
+            .select("a", "b", "n_common",
+                    F.round("jaccard", round_to).alias("jaccard"))
+            .localCheckpoint()
+        )
 
 
 def fuzzy_dup_clusters(

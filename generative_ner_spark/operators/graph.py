@@ -13,14 +13,14 @@ connected_components).
 Scale shape, sized for 100 TB of edges:
 * Everything is (long, long) edge rows — node payloads never enter the
   iteration dataframes.
-* ``pagerank`` pre-materializes the out-degree-annotated symmetric
+* ``pagerank`` (and ``personalized_pagerank``, the same power
+  iteration) pre-materializes the out-degree-annotated symmetric
   adjacency ONCE, hash-partitioned by src, and persists it; each
   iteration's rank frame comes out of a groupBy(dst) hash-partitioned on
   the SAME key domain, so the per-iteration join reuses both sides'
   partitioning — the only per-iteration Exchange is the contribution
-  groupBy. Ranks are ``localCheckpoint``ed every iteration to truncate
-  lineage (an unrolled 5-deep join tree re-optimizes the whole history
-  per step otherwise).
+  groupBy. Ranks are ``localCheckpoint``ed every ``_CHECKPOINT_EVERY``
+  iterations to truncate lineage.
 * ``triangle_counts`` orients every edge from lower to higher
   (degree, id) rank before generating wedges — the classic fix for the
   curse-of-the-last-reducer: a hub of degree D contributes O(D^2) wedges
@@ -33,8 +33,14 @@ Scale shape, sized for 100 TB of edges:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
+
+from generative_ner_spark.operators.cache import cache_scope
+from generative_ner_spark.operators.quality import _md5_rank
 
 
 # Iterative operators truncate lineage every this-many steps instead of
@@ -130,6 +136,70 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
+def _power_iteration(
+    edges: DataFrame,
+    teleport,
+    n_iter: int,
+    damping: float,
+    round_to: int | None,
+) -> DataFrame:
+    """The ONE power iteration behind ``pagerank`` and
+    ``personalized_pagerank`` -> ``(node, degree, pr)``. Per step
+    ``pr'(v) = term(v) + d * sum_{u~v} pr(u)/deg(u)``.
+
+    ``teleport(deg)`` returns ``(base, ranks, term)``: ``base`` holds
+    every graph node plus the columns ``term`` (the teleport Column)
+    reads, ``ranks`` the (node, pr) start vector; ``None`` means an empty
+    graph. Each caller's ``term`` keeps its own update arithmetic bit for
+    bit (the q58/q98 oracles are hash-compared).
+
+    Per-iteration cost: ONE Exchange (the contribution groupBy). The
+    slim canonical list and its degrees are persisted first (``edges``
+    is typically a lazy builder this operator would otherwise expand
+    twice); the degree-annotated symmetric adjacency is repartitioned by
+    src and persisted, and the rank frame arrives hash-partitioned on
+    ``node`` from the previous groupBy, so the join aligns both sides
+    without reshuffling. Lineage is truncated with ``localCheckpoint``
+    every ``_CHECKPOINT_EVERY`` iterations rather than every step (r6):
+    each step's output feeds exactly one consumer, so a short lazy chain
+    is planned ONCE by the single downstream action — the per-step
+    checkpoint paid an eager job + a full rank materialization per
+    iteration for a lineage problem that only exists past ~5 chained
+    steps (quadratic re-planning per ACTION was the r1 failure mode;
+    with one action per chunk, planning is linear in chunk length).
+    """
+    with cache_scope() as keep:
+        e = keep(edges.select("src", "dst"))
+        deg = keep(degrees(e))
+        adj = keep(
+            _symmetric(e)
+            .join(deg.withColumnRenamed("node", "src"), "src")
+            .repartition("src")
+        )
+        start = teleport(deg)
+        if start is None:  # empty graph: empty (node, degree, pr) frame
+            return deg.withColumn("pr", F.lit(0.0)).where(F.lit(False))
+        base, ranks, term = start
+        for it in range(n_iter):
+            contribs = (
+                adj.join(ranks.withColumnRenamed("node", "src"), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum(F.col("pr") / F.col("degree")).alias("_in"))
+            )
+            ranks = base.join(contribs, "node", "left").select(
+                "node",
+                (term + F.lit(damping)
+                 * F.coalesce(F.col("_in"), F.lit(0.0))).alias("pr"),
+            )
+            if (it + 1) % _CHECKPOINT_EVERY == 0 and (it + 1) < n_iter:
+                ranks = ranks.localCheckpoint()
+        return ranks.join(deg, "node").select(
+            "node", "degree",
+            (F.round("pr", round_to) if round_to is not None
+             else F.col("pr")).alias("pr"),
+        ).localCheckpoint()
+
+
 def pagerank(
     edges: DataFrame,
     n_iter: int = 5,
@@ -141,76 +211,19 @@ def pagerank(
     ``pr'(v) = (1-d)/N + d * sum_{u~v} pr(u)/deg(u)``. Nodes are "in the
     graph" iff they appear in an edge, so every node has degree >= 1 and
     there is no dangling mass to redistribute — the update is exactly the
-    q58 oracle's unrolled SQL.
-
-    Per-iteration cost: ONE Exchange (the contribution groupBy). The
-    degree-annotated symmetric adjacency is repartitioned by src and
-    persisted up front; the rank frame arrives hash-partitioned on
-    ``node`` from the previous groupBy, so the join aligns both sides
-    without reshuffling. Lineage is truncated with ``localCheckpoint``
-    every ``_CHECKPOINT_EVERY`` iterations rather than every step (r6):
-    each step's output feeds exactly one consumer, so a short lazy chain
-    is planned ONCE by the single downstream action — the per-step
-    checkpoint paid an eager job + a full rank materialization per
-    iteration for a lineage problem that only exists past ~5 chained
-    steps (quadratic re-planning per ACTION was the r1 failure mode;
-    with one action per chunk, planning is linear in chunk length).
+    q58 oracle's unrolled SQL. Scale shape: ``_power_iteration``.
     """
-    spark = edges.sparkSession
-    # persist the SLIM canonical list first (r6b, guide §5): ``edges`` is
-    # typically a lazy builder (the co-occurrence groupBy chain) and this
-    # operator expands it twice — once under degrees, once under the
-    # symmetric adjacency; uncached, each expansion re-ran the whole
-    # upstream build
-    e = edges.select("src", "dst").persist()
-    deg = degrees(e).persist()
-    adj = (
-        _symmetric(e)
-        .join(deg.withColumnRenamed("node", "src"), "src")
-        .repartition("src")
-        .persist()
-    )
-    n = deg.count()  # also materializes deg (and seeds adj's build)
-    if n == 0:  # empty graph: empty (node, degree, pr) frame, no 1/0
-        deg.unpersist()
-        adj.unpersist()
-        e.unpersist()
-        return deg.withColumn("pr", F.lit(0.0)).where(F.lit(False))
-    ranks = deg.select(
-        "node", (F.lit(1.0) / F.lit(float(n))).alias("pr")
-    ).localCheckpoint()
-    teleport = (1.0 - damping) / float(n)
-    for it in range(n_iter):
-        contribs = (
-            adj.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("degree")).alias("_in"))
-        )
-        ranks = (
-            deg.select("node")
-            .join(contribs, "node", "left")
-            .select(
-                "node",
-                (F.lit(teleport)
-                 + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                 ).alias("pr"),
-            )
-        )
-        if (it + 1) % _CHECKPOINT_EVERY == 0 and (it + 1) < n_iter:
-            ranks = ranks.localCheckpoint()
-    out = ranks.join(deg, "node").select(
-        "node", "degree",
-        (F.round("pr", round_to) if round_to is not None
-         else F.col("pr")).alias("pr"),
-    )
-    # pin BEFORE releasing the caches: the result joins deg lazily, so
-    # an unpersist-then-materialize recomputed degrees from raw edges —
-    # exactly the double-compute the persist was bought for
-    out = out.localCheckpoint()
-    adj.unpersist()
-    deg.unpersist()
-    e.unpersist()
-    return out
+
+    def uniform(deg: DataFrame):
+        n = deg.count()  # also materializes deg (and seeds adj's build)
+        if n == 0:
+            return None
+        init = deg.select(
+            "node", (F.lit(1.0) / F.lit(float(n))).alias("pr")
+        ).localCheckpoint()
+        return deg.select("node"), init, F.lit((1.0 - damping) / float(n))
+
+    return _power_iteration(edges, uniform, n_iter, damping, round_to)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -243,61 +256,59 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         .join(deg.withColumnRenamed("node", "dst")
                  .withColumnRenamed("degree", "_dd"), "dst")
     )
-    oriented = ranked.where(
-        (F.col("_ds") < F.col("_dd"))
-        | ((F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst")))
-    ).select("src", "dst").persist()
-    # Edge-iterator intersection (the r6 rewrite, guide §2.3 "shuffle
-    # fewer bytes"): a triangle {a,b,c} ordered by rank is THREE oriented
-    # edges a->b, a->c, b->c, so it is found exactly once at its base
-    # edge (a, b) as |out(a) ∩ out(b)| — the wedge materialization
-    # (sum_a C(out_a, 2) rows through an exchange + a row-per-wedge hash
-    # join; ~200M rows on the sf1.0 co-occurrence graph) is replaced by
-    # ONE out-neighbor-list aggregation (<= E rows, out-degree O(sqrt E)
-    # by the orientation) and two E-row joins whose intersection runs
-    # in-memory per edge. Per-triangle credits are identical: apex a and
-    # middle b each get |common|, every c in common gets 1.
-    adjl = oriented.groupBy("src").agg(
-        F.sort_array(F.collect_list("dst")).alias("_nb"))
-    # re-derive each base edge by exploding the adjacency list itself —
-    # (src, dst, _nba) comes out of ONE generator over adjl instead of a
-    # second E-row join shipping the src-side arrays
-    # shuffle_hash hint: Catalyst's size ESTIMATE for adjl ignores the
-    # neighbor arrays' real width, so it picks a broadcast build that
-    # OOMs the driver on sf1.0's ~200k x 45-long arrays; a per-partition
-    # hash build is the right strategy at every scale here
-    tri = (
-        adjl.select("src", F.col("_nb").alias("_nba"),
-                    F.explode("_nb").alias("dst"))
-        .join(adjl.select(F.col("src").alias("dst"),
-                          F.col("_nb").alias("_nbb")).hint("shuffle_hash"),
-              "dst")
-        .withColumn("_common", F.array_intersect("_nba", "_nbb"))
-        .withColumn("_n", F.size("_common"))
-        .where(F.col("_n") > 0)
-        .select("src", "dst", "_common", "_n")
-    )
-    # ONE explode emits all three credits per base edge (a 3-way union of
-    # selects over this subtree re-evaluates the join+intersect three
-    # times — union branches share exchanges, not compute)
-    credit = F.concat(
-        F.array(
-            F.struct(F.col("src").alias("node"), F.col("_n").alias("_c")),
-            F.struct(F.col("dst").alias("node"), F.col("_n").alias("_c")),
-        ),
-        F.transform(
-            "_common",
-            lambda c: F.struct(c.alias("node"), F.lit(1).alias("_c")),
-        ),
-    )
-    out = (
-        tri.select(F.explode(credit).alias("_e"))
-        .groupBy(F.col("_e.node").alias("node"))
-        .agg(F.sum("_e._c").cast("long").alias("n_triangles"))
-    )
-    out = out.localCheckpoint()
-    oriented.unpersist()
-    return out
+    with cache_scope() as keep:
+        oriented = keep(ranked.where(
+            (F.col("_ds") < F.col("_dd"))
+            | ((F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst")))
+        ).select("src", "dst"))
+        # Edge-iterator intersection (the r6 rewrite, guide §2.3 "shuffle
+        # fewer bytes"): a triangle {a,b,c} ordered by rank is THREE oriented
+        # edges a->b, a->c, b->c, so it is found exactly once at its base
+        # edge (a, b) as |out(a) ∩ out(b)| — the wedge materialization
+        # (sum_a C(out_a, 2) rows through an exchange + a row-per-wedge hash
+        # join; ~200M rows on the sf1.0 co-occurrence graph) is replaced by
+        # ONE out-neighbor-list aggregation (<= E rows, out-degree O(sqrt E)
+        # by the orientation) and two E-row joins whose intersection runs
+        # in-memory per edge. Per-triangle credits are identical: apex a and
+        # middle b each get |common|, every c in common gets 1.
+        adjl = oriented.groupBy("src").agg(
+            F.sort_array(F.collect_list("dst")).alias("_nb"))
+        # re-derive each base edge by exploding the adjacency list itself —
+        # (src, dst, _nba) comes out of ONE generator over adjl instead of a
+        # second E-row join shipping the src-side arrays
+        # shuffle_hash hint: Catalyst's size ESTIMATE for adjl ignores the
+        # neighbor arrays' real width, so it picks a broadcast build that
+        # OOMs the driver on sf1.0's ~200k x 45-long arrays; a per-partition
+        # hash build is the right strategy at every scale here
+        tri = (
+            adjl.select("src", F.col("_nb").alias("_nba"),
+                        F.explode("_nb").alias("dst"))
+            .join(adjl.select(F.col("src").alias("dst"),
+                              F.col("_nb").alias("_nbb")).hint("shuffle_hash"),
+                  "dst")
+            .withColumn("_common", F.array_intersect("_nba", "_nbb"))
+            .withColumn("_n", F.size("_common"))
+            .where(F.col("_n") > 0)
+            .select("src", "dst", "_common", "_n")
+        )
+        # ONE explode emits all three credits per base edge (a 3-way union of
+        # selects over this subtree re-evaluates the join+intersect three
+        # times — union branches share exchanges, not compute)
+        credit = F.concat(
+            F.array(
+                F.struct(F.col("src").alias("node"), F.col("_n").alias("_c")),
+                F.struct(F.col("dst").alias("node"), F.col("_n").alias("_c")),
+            ),
+            F.transform(
+                "_common",
+                lambda c: F.struct(c.alias("node"), F.lit(1).alias("_c")),
+            ),
+        )
+        return (
+            tri.select(F.explode(credit).alias("_e"))
+            .groupBy(F.col("_e.node").alias("node"))
+            .agg(F.sum("_e._c").cast("long").alias("n_triangles"))
+        ).localCheckpoint()
 
 
 def _adjacency_lists(edges: DataFrame) -> DataFrame:
@@ -350,36 +361,35 @@ def khop_neighbors(
     -key probes already, and the collect_list build costs more than the
     three probes combined.)
     """
-    adj = (_symmetric(edges).repartition("src")
-           .sortWithinPartitions("src").persist())
     # hop frames accumulate as SEPARATE checkpointed frames (r6b): the
     # per-hop anti-join consumes the visited set as a LAZY union of
     # those shallow scans, so the r5 per-hop visited-union checkpoint —
     # which re-materialized the whole history every hop, O(k^2) rows —
-    # is gone; only each hop's own (new) frontier is materialized.
-    hops = [
+    # is gone; only each hop's own (new) frontier is materialized. The
+    # returned union reads only checkpoints, never the adjacency cache.
+    visited = (
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .withColumn("hop", F.lit(0))
         .localCheckpoint()
-    ]
-    visited = hops[0]
+    )
     frontier = visited.select("node")
-    for i in range(1, k + 1):
-        nxt = (
-            adj.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(i))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        hops.append(nxt)
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("node")
-    adj.unpersist()
+    with cache_scope() as keep:
+        adj = keep(_symmetric(edges).repartition("src")
+                   .sortWithinPartitions("src"))
+        for i in range(1, k + 1):
+            nxt = (
+                adj.join(frontier.withColumnRenamed("node", "src"), "src")
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .withColumn("hop", F.lit(i))
+                .localCheckpoint()
+            )
+            if nxt.isEmpty():
+                break
+            visited = visited.unionByName(nxt)
+            frontier = nxt.select("node")
     return visited
 
 
@@ -420,69 +430,63 @@ def random_walks(
     localCheckpointed per step; a walk from a degree-0 seed emits its
     start row only (inner join: no _nb row, walk stops).
     """
-    adj = _adjacency_lists(edges).persist()
-    # default start set = every node touching an edge == exactly adj's
-    # (unique) src keys: reading it off the persisted frame avoids a
-    # SECOND expansion of the (usually lazy) upstream edge build that
-    # the r6c form paid for the symmetric-distinct (guide §5)
-    start_nodes = (
-        seeds.select(F.col(node_col).alias("node")).distinct()
-        if seeds is not None
-        else adj.select(F.col("src").alias("node"))
-    )
-    # walk_id is a STRING key ("node:w"): node * walks_per_node + w
-    # would be an ANSI long multiply that THROWS on hash-derived ids
-    # near the 64-bit range (the CLAUDE.md overflow gotcha)
-    walks = start_nodes.select(
-        "node",
-        F.explode(F.expr(f"sequence(0, {int(walks_per_node) - 1})"))
-        .alias("_w"),
-    ).select(
-        F.concat_ws(":", F.col("node").cast("string"),
-                    F.col("_w").cast("string")).alias("walk_id"),
-        F.col("node").alias("start_node"),
-    )
-    # the ONE md5-prefix hash home (quality._md5_rank) — salt:walk:step
-    from generative_ner_spark.operators.quality import _md5_rank
-
-    # steps accumulate as SEPARATE checkpointed frames, unioned once at
-    # the end (r6): the iteration only ever consumes the previous step's
-    # frontier, never the visited union, so the r5 per-step
-    # visited-union localCheckpoint re-materialized the whole walk
-    # history every step — O(steps^2) rows copied for nothing. The
-    # final union is walk_len + 1 shallow scans of checkpointed frames.
-    steps = [walks.select(
-        "walk_id", "start_node", F.lit(0).alias("step"),
-        F.col("start_node").alias("node"),
-    ).localCheckpoint()]
-    frontier = steps[0].select("walk_id", "start_node",
-                               F.col("node").alias("_cur"))
-    for i in range(1, walk_len + 1):
-        h = _md5_rank(
-            F.concat_ws(":", F.col("walk_id").cast("string"),
-                        F.lit(str(i))), salt)
-        nxt = (
-            frontier  # inner join: degree-0 walks stop here (no _nb row)
-            .join(adj.withColumnRenamed("src", "_cur"), "_cur")
-            .select(
-                "walk_id", "start_node", F.lit(i).alias("step"),
-                F.element_at(
-                    "_nb",
-                    (F.pmod(h, F.size("_nb")) + F.lit(1)).cast("int"),
-                ).alias("node"),
-            )
-            .localCheckpoint()
+    with cache_scope() as keep:
+        adj = keep(_adjacency_lists(edges))
+        # default start set = every node touching an edge == exactly adj's
+        # (unique) src keys: reading it off the persisted frame avoids a
+        # SECOND expansion of the (usually lazy) upstream edge build that
+        # the r6c form paid for the symmetric-distinct (guide §5)
+        start_nodes = (
+            seeds.select(F.col(node_col).alias("node")).distinct()
+            if seeds is not None
+            else adj.select(F.col("src").alias("node"))
         )
-        if nxt.isEmpty():
-            break
-        steps.append(nxt)
-        frontier = nxt.select("walk_id", "start_node",
-                              F.col("node").alias("_cur"))
-    adj.unpersist()
-    visited = steps[0]
-    for s in steps[1:]:
-        visited = visited.unionByName(s)
-    return visited
+        # walk_id is a STRING key ("node:w"): node * walks_per_node + w
+        # would be an ANSI long multiply that THROWS on hash-derived ids
+        # near the 64-bit range (the CLAUDE.md overflow gotcha)
+        walks = start_nodes.select(
+            "node",
+            F.explode(F.expr(f"sequence(0, {int(walks_per_node) - 1})"))
+            .alias("_w"),
+        ).select(
+            F.concat_ws(":", F.col("node").cast("string"),
+                        F.col("_w").cast("string")).alias("walk_id"),
+            F.col("node").alias("start_node"),
+        )
+        # steps accumulate as SEPARATE checkpointed frames, unioned once at
+        # the end (r6): the iteration only ever consumes the previous step's
+        # frontier, never the visited union, so the r5 per-step
+        # visited-union localCheckpoint re-materialized the whole walk
+        # history every step — O(steps^2) rows copied for nothing. The
+        # final union is walk_len + 1 shallow scans of checkpointed frames.
+        steps = [walks.select(
+            "walk_id", "start_node", F.lit(0).alias("step"),
+            F.col("start_node").alias("node"),
+        ).localCheckpoint()]
+        frontier = steps[0].select("walk_id", "start_node",
+                                   F.col("node").alias("_cur"))
+        for i in range(1, walk_len + 1):
+            h = _md5_rank(  # salt:walk:step
+                F.concat_ws(":", F.col("walk_id").cast("string"),
+                            F.lit(str(i))), salt)
+            nxt = (
+                frontier  # inner join: degree-0 walks stop here (no _nb row)
+                .join(adj.withColumnRenamed("src", "_cur"), "_cur")
+                .select(
+                    "walk_id", "start_node", F.lit(i).alias("step"),
+                    F.element_at(
+                        "_nb",
+                        (F.pmod(h, F.size("_nb")) + F.lit(1)).cast("int"),
+                    ).alias("node"),
+                )
+                .localCheckpoint()
+            )
+            if nxt.isEmpty():
+                break
+            steps.append(nxt)
+            frontier = nxt.select("walk_id", "start_node",
+                                  F.col("node").alias("_cur"))
+    return reduce(DataFrame.unionByName, steps)
 
 
 def components(edges: DataFrame, max_iter: int = 20,
@@ -494,6 +498,8 @@ def components(edges: DataFrame, max_iter: int = 20,
     large-star/small-star, Kiveris et al. SoCC'14: O(log n) rounds with
     per-round localCheckpoint; small edge sets short-circuit to a
     driver-side union-find). Nodes touching no edge emit no row.
+    Callers with duplicate-heavy edge inputs should deduplicate them
+    first: round 1 pays the duplicate fan-out.
     """
     from generative_ner_spark.operators.canonicalize import (
         connected_components,
@@ -530,29 +536,38 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     reads node ids off the ``dst`` column for the same reason — in a
     symmetric adjacency src and dst carry the identical node set, and
     dst-partitioning makes that distinct exchange-free.
+
+    Node ids must be integral: the smallest-label tie-break negates the
+    label. Other ``src``/``dst`` types raise ``ValueError``.
     """
-    adj = _symmetric(edges).repartition("dst").persist()
-    labels = (
-        adj.select(F.col("dst").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(n_iter):
-        nbr = (
-            adj.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"), "label")
-            .agg(F.count("*").alias("cnt"))
-        )
+    for c in ("src", "dst"):
+        if not isinstance(edges.schema[c].dataType, IntegralType):
+            raise ValueError(
+                f"label_propagation: {c} must be an integral node id "
+                f"(the smallest-label tie-break negates it), got "
+                f"{edges.schema[c].dataType.simpleString()}")
+    with cache_scope() as keep:
+        adj = keep(_symmetric(edges).repartition("dst"))
         labels = (
-            nbr.groupBy("node")
-            .agg(F.max_by(
-                "label",
-                F.struct(F.col("cnt"), (-F.col("label")).alias("_negl")),
-            ).alias("label"))
+            adj.select(F.col("dst").alias("node")).distinct()
+            .withColumn("label", F.col("node"))
             .localCheckpoint()
         )
-    adj.unpersist()
-    return labels
+        for _ in range(n_iter):
+            nbr = (
+                adj.join(labels.withColumnRenamed("node", "dst"), "dst")
+                .groupBy(F.col("src").alias("node"), "label")
+                .agg(F.count("*").alias("cnt"))
+            )
+            labels = (
+                nbr.groupBy("node")
+                .agg(F.max_by(
+                    "label",
+                    F.struct(F.col("cnt"), (-F.col("label")).alias("_negl")),
+                ).alias("label"))
+                .localCheckpoint()
+            )
+        return labels
 
 
 def triangle_count_approx(
@@ -578,28 +593,23 @@ def triangle_count_approx(
     if not 0 < p <= 1:
         raise ValueError("need 0 < p <= 1")
     cut = int(p * float(1 << 60))
-    # the ONE md5-prefix hash home (quality._md5_rank) — salt:src:dst
-    from generative_ner_spark.operators.quality import _md5_rank
-
-    coin = _md5_rank(
+    coin = _md5_rank(  # the ONE md5-prefix hash home — salt:src:dst
         F.concat_ws(":", F.col("src").cast("string"),
                     F.col("dst").cast("string")), salt)
-    sampled = edges.select("src", "dst").where(coin < cut).persist()
-    tri = triangle_counts(sampled)
-    n_tri = tri.agg(
-        F.coalesce(F.sum("n_triangles"), F.lit(0)).alias("s")
-    ).select((F.col("s") / 3).cast("long").alias("t"))  # 3 credits/triangle
-    out = sampled.agg(F.count("*").alias("n_edges_sampled")).crossJoin(
-        n_tri
-    ).select(
-        "n_edges_sampled",
-        F.col("t").alias("n_triangles_sampled"),
-        F.round(F.col("t") / F.lit(float(p) ** 3), 6)
-        .alias("est_triangles"),
-    )
-    out = out.localCheckpoint()
-    sampled.unpersist()
-    return out
+    with cache_scope() as keep:
+        sampled = keep(edges.select("src", "dst").where(coin < cut))
+        tri = triangle_counts(sampled)
+        n_tri = tri.agg(
+            F.coalesce(F.sum("n_triangles"), F.lit(0)).alias("s")
+        ).select((F.col("s") / 3).cast("long").alias("t"))  # 3 per triangle
+        return sampled.agg(F.count("*").alias("n_edges_sampled")).crossJoin(
+            n_tri
+        ).select(
+            "n_edges_sampled",
+            F.col("t").alias("n_triangles_sampled"),
+            F.round(F.col("t") / F.lit(float(p) ** 3), 6)
+            .alias("est_triangles"),
+        ).localCheckpoint()
 
 
 def hits(
@@ -640,61 +650,55 @@ def hits(
     # exchange and comes out partitioned on its join key; the dst copy
     # is derived FROM the cached src copy (already distinct — one more
     # slim exchange, no second expansion of the upstream edge build)
-    e_src = base.repartition("src").distinct().persist()
-    e_dst = e_src.repartition("dst").persist()
-    nodes = (
-        e_src.select(F.col("src").alias("node"))
-        .unionByName(e_dst.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        e_src.unpersist()
-        e_dst.unpersist()
-        return nodes.select(
-            "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth"))
-    hub = nodes.select(
-        "node", (F.lit(1.0) / F.lit(float(n))).alias("hub")
-    ).localCheckpoint()
-    auth = None
-    for _ in range(n_iter):
-        araw = (
-            e_src.join(hub.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("_raw"))
+    with cache_scope() as keep:
+        e_src = keep(base.repartition("src").distinct())
+        e_dst = keep(e_src.repartition("dst"))
+        nodes = keep(
+            e_src.select(F.col("src").alias("node"))
+            .unionByName(e_dst.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        n = nodes.count()
+        if n == 0:
+            return nodes.select(
+                "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth"))
+        hub = nodes.select(
+            "node", (F.lit(1.0) / F.lit(float(n))).alias("hub")
         ).localCheckpoint()
-        atot = araw.agg(F.sum("_raw")).first()[0]
-        auth = araw.select(
-            "node", (F.col("_raw") / F.lit(float(atot))).alias("auth")
+        auth = None
+        for _ in range(n_iter):
+            araw = (
+                e_src.join(hub.withColumnRenamed("node", "src"), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("hub").alias("_raw"))
+            ).localCheckpoint()
+            atot = araw.agg(F.sum("_raw")).first()[0]
+            auth = araw.select(
+                "node", (F.col("_raw") / F.lit(float(atot))).alias("auth")
+            )
+            hraw = (
+                e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.sum("auth").alias("_raw"))
+            ).localCheckpoint()
+            htot = hraw.agg(F.sum("_raw")).first()[0]
+            hub = hraw.select(
+                "node", (F.col("_raw") / F.lit(float(htot))).alias("hub")
+            )
+        out = (
+            nodes.join(hub, "node", "left")
+            .join(auth, "node", "left")
+            .select(
+                "node",
+                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
+            )
         )
-        hraw = (
-            e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("_raw"))
-        ).localCheckpoint()
-        htot = hraw.agg(F.sum("_raw")).first()[0]
-        hub = hraw.select(
-            "node", (F.col("_raw") / F.lit(float(htot))).alias("hub")
-        )
-    out = (
-        nodes.join(hub, "node", "left")
-        .join(auth, "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-            F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
-        )
-    )
-    if round_to is not None:
-        out = out.select(
-            "node", F.round("hub", round_to).alias("hub"),
-            F.round("auth", round_to).alias("auth"))
-    out = out.localCheckpoint()
-    e_src.unpersist()
-    e_dst.unpersist()
-    nodes.unpersist()
-    return out
+        if round_to is not None:
+            out = out.select(
+                "node", F.round("hub", round_to).alias("hub"),
+                F.round("auth", round_to).alias("auth"))
+        return out.localCheckpoint()
 
 
 def clustering_coefficient(
@@ -715,29 +719,26 @@ def clustering_coefficient(
     the final per-node join is on the uniform node key. Fully
     SQL-expressible => full q86 oracle.
     """
-    # persist the slim list once (r6b, guide §5): degrees here AND the
-    # whole triangle machinery below both expand ``edges``; the final
-    # join runs as its own action, which re-ran the co-occurrence build
-    # a second time uncached
-    e = edges.select("src", "dst").persist()
-    deg = degrees(e)
-    tri = triangle_counts(e)  # eager: returns a checkpointed frame
     cc = F.when(
         F.col("degree") >= 2,
         (F.lit(2.0) * F.col("n_triangles").cast("double"))
         / (F.col("degree") * (F.col("degree") - F.lit(1))).cast("double"),
     ).otherwise(F.lit(0.0))
-    out = deg.join(tri, "node", "left").select(
-        "node", "degree",
-        F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
-    ).select(
-        "node", "degree", "n_triangles",
-        (F.round(cc, round_to) if round_to is not None else cc).alias("cc"),
-    )
-    # pin before releasing the cache the lazy deg side still references
-    out = out.localCheckpoint()
-    e.unpersist()
-    return out
+    with cache_scope() as keep:
+        # persist the slim list once (r6b, guide §5): degrees here AND the
+        # whole triangle machinery below both expand ``edges``; the final
+        # join runs as its own action, which re-ran the co-occurrence
+        # build a second time uncached
+        e = keep(edges.select("src", "dst"))
+        tri = triangle_counts(e)  # eager: returns a checkpointed frame
+        return degrees(e).join(tri, "node", "left").select(
+            "node", "degree",
+            F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
+        ).select(
+            "node", "degree", "n_triangles",
+            (F.round(cc, round_to) if round_to is not None
+             else cc).alias("cc"),
+        ).localCheckpoint()
 
 
 def adamic_adar(
@@ -843,29 +844,29 @@ def bounded_closure(
     """
     if int(max_depth) < 1:
         raise ValueError("bounded_closure: max_depth must be >= 1")
-    adj = edges.select("src", "dst").distinct().repartition("src").persist()
-    reached = adj.select("src", "dst", F.lit(1).alias("depth"))
-    reached = reached.localCheckpoint()
-    frontier = reached
-    for d in range(2, int(max_depth) + 1):
-        step = (
-            frontier.select(F.col("src"), F.col("dst").alias("_mid"))
-            .join(adj.select(F.col("src").alias("_mid"),
-                             F.col("dst")), "_mid")
-            .select("src", "dst")
-            .distinct()
-            .where(F.col("src") != F.col("dst"))  # no self-loops
-            .join(reached.select("src", "dst"), ["src", "dst"],
-                  "left_anti")
-            .withColumn("depth", F.lit(d))
-            .localCheckpoint()
-        )
-        if step.isEmpty():  # converged before max_depth: stop expanding
-            break
-        reached = reached.unionByName(step).localCheckpoint()
-        frontier = step
-    adj.unpersist()
-    return reached
+    with cache_scope() as keep:
+        adj = keep(edges.select("src", "dst").distinct().repartition("src"))
+        reached = adj.select("src", "dst", F.lit(1).alias("depth"))
+        reached = reached.localCheckpoint()
+        frontier = reached
+        for d in range(2, int(max_depth) + 1):
+            step = (
+                frontier.select(F.col("src"), F.col("dst").alias("_mid"))
+                .join(adj.select(F.col("src").alias("_mid"),
+                                 F.col("dst")), "_mid")
+                .select("src", "dst")
+                .distinct()
+                .where(F.col("src") != F.col("dst"))  # no self-loops
+                .join(reached.select("src", "dst"), ["src", "dst"],
+                      "left_anti")
+                .withColumn("depth", F.lit(d))
+                .localCheckpoint()
+            )
+            if step.isEmpty():  # converged before max_depth: stop expanding
+                break
+            reached = reached.unionByName(step).localCheckpoint()
+            frontier = step
+        return reached
 
 
 def personalized_pagerank(
@@ -883,62 +884,27 @@ def personalized_pagerank(
     ``seeds`` is a (node) frame; seeds absent from the graph are
     ignored; init = the seed distribution. Output (node, degree, pr).
 
-    Scale shape = pagerank's: degree-annotated adjacency repartitioned
-    + persisted once, ONE Exchange per iteration (contribution
-    groupBy), teleport vector joined as a slim broadcast frame,
-    localCheckpoint per step. The q98 oracle unrolls the identical
-    updates.
+    PageRank with a seed teleport vector: the same ``_power_iteration``
+    (teleport vector joined as a slim broadcast frame and checkpointed
+    once). The q98 oracle unrolls the identical updates.
     """
-    # slim canonical list persisted once (r6b, guide §5): degrees and
-    # the symmetric adjacency both expand the (usually lazy) builder
-    e = edges.select("src", "dst").persist()
-    deg = degrees(e).persist()
-    seed_nodes = deg.join(
-        seeds.select("node").distinct(), "node", "left_semi")
-    ns = seed_nodes.count()
-    if ns == 0:
-        deg.unpersist()
-        e.unpersist()
-        raise ValueError(
-            "personalized_pagerank: no seed appears in the graph")
-    adj = (
-        _symmetric(e)
-        .join(deg.withColumnRenamed("node", "src"), "src")
-        .repartition("src")
-        .persist()
-    )
-    tele = (
-        deg.select("node")
-        .join(F.broadcast(
-            seed_nodes.select("node").withColumn(
-                "_s", F.lit(1.0 / float(ns)))), "node", "left")
-        .select("node", F.coalesce(F.col("_s"), F.lit(0.0)).alias("s"))
-        .localCheckpoint()
-    )
-    ranks = tele.select("node", F.col("s").alias("pr")).localCheckpoint()
-    for _ in range(n_iter):
-        contribs = (
-            adj.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("degree")).alias("_in"))
-        )
-        ranks = (
-            tele.join(contribs, "node", "left")
-            .select(
-                "node",
-                (F.lit(1.0 - damping) * F.col("s")
-                 + F.lit(damping)
-                 * F.coalesce(F.col("_in"), F.lit(0.0))).alias("pr"),
-            )
+
+    def seeded(deg: DataFrame):
+        seed_nodes = deg.join(
+            seeds.select("node").distinct(), "node", "left_semi")
+        ns = seed_nodes.count()
+        if ns == 0:
+            raise ValueError(
+                "personalized_pagerank: no seed appears in the graph")
+        tele = (
+            deg.select("node")
+            .join(F.broadcast(
+                seed_nodes.select("node").withColumn(
+                    "_s", F.lit(1.0 / float(ns)))), "node", "left")
+            .select("node", F.coalesce(F.col("_s"), F.lit(0.0)).alias("s"))
             .localCheckpoint()
         )
-    out = ranks.join(deg, "node").select(
-        "node", "degree",
-        (F.round("pr", round_to) if round_to is not None
-         else F.col("pr")).alias("pr"),
-    )
-    out = out.localCheckpoint()
-    adj.unpersist()
-    deg.unpersist()
-    e.unpersist()
-    return out
+        return (tele, tele.select("node", F.col("s").alias("pr")),
+                F.lit(1.0 - damping) * F.col("s"))
+
+    return _power_iteration(edges, seeded, n_iter, damping, round_to)

@@ -28,6 +28,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
+from generative_ner_spark.operators.cache import cache_scope
+from generative_ner_spark.operators.canonicalize import capped_self_join_pairs
+
 
 # Driver-side query collects are bounded by this default (overridable per
 # call via max_query_rows). 100k queries x a 1-4 KB embedding row is a few
@@ -314,7 +317,8 @@ class LshIndex:
     one bucket id per hash table — NOT exploded, so the index is exactly one
     extra int column per table and can be cached / written as a table and
     probed many times without recomputing corpus buckets (the r1 probe
-    rebuilt them per query — its dominant cost)."""
+    rebuilt them per query — its dominant cost). Its cache is caller-owned
+    (explicit persist/unpersist, no cache_scope): it outlives every probe."""
 
     df: DataFrame
     dim: int
@@ -807,18 +811,14 @@ def embedding_near_dup_pairs(
     vecs = embeddings.select(F.col(id_col).alias("_id"),
                              F.col(vec_col).alias("_vec"))
     # banding rows feed three plan branches (bucket counts + both join
-    # sides): persist so the Arrow bucketing UDF runs ONCE, and eagerly
-    # materialize the candidate pairs below before unpersisting
-    b = with_lsh_buckets(
-        embeddings.select(id_col, vec_col), dim, tables, planes, vec_col
-    ).select("lsh_table", "bucket", id_col).persist()
-    from generative_ner_spark.operators.canonicalize import (
-        capped_self_join_pairs,
-    )
-
-    pairs = capped_self_join_pairs(
-        b, ("lsh_table", "bucket"), id_col, max_bucket, metrics)
-    b.unpersist()  # candidates are materialized; banding cache done
+    # sides): persist so the Arrow bucketing UDF runs ONCE; the candidate
+    # pairs come back materialized, so the scope releases the banding
+    with cache_scope() as keep:
+        b = keep(with_lsh_buckets(
+            embeddings.select(id_col, vec_col), dim, tables, planes, vec_col
+        ).select("lsh_table", "bucket", id_col))
+        pairs = capped_self_join_pairs(
+            b, ("lsh_table", "bucket"), id_col, max_bucket, metrics)
     return (
         pairs
         .join(vecs.select(F.col("_id").alias("a"), F.col("_vec").alias("va")), "a")

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from generative_ner_spark.operators.cache import cache_scope
+
 
 def term_frequencies(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
@@ -122,7 +124,7 @@ def unigram_logprob_score(
     """
     # persist stays alive for the caller's action (an unpersist here
     # would evict before the scoring job runs); executor storage reclaims
-    # it under memory pressure
+    # it under memory pressure. Caller-owned, so no cache_scope
     tf = term_frequencies(df, id_col, text_col).persist()
     freq = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
     if broadcast_vocab:
@@ -222,40 +224,37 @@ def pmi_bigrams(
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), "[ \t\n\x0b\f\r]+"),
         lambda t: t != F.lit(""))
-    pairs = (
-        df.select(toks.alias("_tk"))
-        .where(F.size("_tk") >= 2)
-        .select(F.explode(F.expr(
-            "transform(sequence(0, size(_tk) - 2),"
-            " i -> struct(_tk[i] AS w1, _tk[i + 1] AS w2))")).alias("_bg"))
-        .select("_bg.w1", "_bg.w2")
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("n_pair"))
-        .persist()
-    )
-    total = pairs.agg(F.sum("n_pair")).first()[0]
-    if total is None:  # no doc has two tokens: empty result frame
-        pairs.unpersist()
-        return pairs.withColumn("pmi", F.lit(0.0)).where(F.lit(False))
-    first = pairs.groupBy("w1").agg(F.sum("n_pair").alias("n_first"))
-    second = pairs.groupBy("w2").agg(F.sum("n_pair").alias("n_second"))
-    out = (
-        pairs.where(F.col("n_pair") >= min_count)
-        .join(first, "w1")
-        .join(second, "w2")
-        .select(
-            "w1", "w2", "n_pair",
-            F.round(
-                F.log(F.col("n_pair").cast("double") * F.lit(float(total))
-                      / (F.col("n_first").cast("double")
-                         * F.col("n_second").cast("double"))),
-                round_to,
-            ).alias("pmi"),
+    with cache_scope() as keep:
+        pairs = keep(
+            df.select(toks.alias("_tk"))
+            .where(F.size("_tk") >= 2)
+            .select(F.explode(F.expr(
+                "transform(sequence(0, size(_tk) - 2),"
+                " i -> struct(_tk[i] AS w1, _tk[i + 1] AS w2))")).alias("_bg"))
+            .select("_bg.w1", "_bg.w2")
+            .groupBy("w1", "w2")
+            .agg(F.count("*").alias("n_pair"))
         )
-    )
-    out = out.localCheckpoint()
-    pairs.unpersist()
-    return out
+        total = pairs.agg(F.sum("n_pair")).first()[0]
+        if total is None:  # no doc has two tokens: empty result frame
+            return pairs.withColumn("pmi", F.lit(0.0)).where(F.lit(False))
+        first = pairs.groupBy("w1").agg(F.sum("n_pair").alias("n_first"))
+        second = pairs.groupBy("w2").agg(F.sum("n_pair").alias("n_second"))
+        return (
+            pairs.where(F.col("n_pair") >= min_count)
+            .join(first, "w1")
+            .join(second, "w2")
+            .select(
+                "w1", "w2", "n_pair",
+                F.round(
+                    F.log(F.col("n_pair").cast("double") * F.lit(float(total))
+                          / (F.col("n_first").cast("double")
+                             * F.col("n_second").cast("double"))),
+                    round_to,
+                ).alias("pmi"),
+            )
+            .localCheckpoint()
+        )
 
 
 def zipf_slope(
@@ -370,6 +369,8 @@ def bigram_nll(
             " i -> struct(_tk[i] AS w1, _tk[i + 1] AS w2))")).alias("_bg"))
         .select("id", "_bg.w1", "_bg.w2")
     ).persist()
+    # bg / c12 stay cached for the caller's action (the lazy result reads
+    # them): caller-owned, like unigram_logprob_score's tf
     c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("_c12")).persist()
     c1 = c12.groupBy("w1").agg(F.sum("_c12").alias("_c1"))
     if vocab is None or vocab == 0:  # no tokens anywhere: empty result
@@ -408,6 +409,7 @@ def oov_rate(
     vocabulary is vocab-sized and the membership check a broadcast
     LEFT join (NULL => OOV). Fully SQL-expressible => full q99 oracle.
     """
+    # caller-owned cache: the lazy result reads it (unigram_logprob_score)
     tf = term_frequencies(df, id_col, text_col).persist()
     vocab = (
         tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))

@@ -110,7 +110,9 @@ def run_pipeline(
     # two jobs (the checkpoint write and the final serve join) — without
     # this the Python render+hash pass re-executed per job AND fused with
     # the generation mapInPandas in one task (two chained CPU-bound
-    # python stages oversubscribe workers 2x, the CLAUDE.md gotcha)
+    # python stages oversubscribe workers 2x, the CLAUDE.md gotcha).
+    # Caller-owned, not a cache_scope: the returned lazy frames read it, and
+    # a release would re-render every prompt on each repeated run_pipeline.
     hashed = detect.with_prompt_hash(examples, prompt_format, language).persist()
     hashed.count()
     # resume only from a COMMITTED checkpoint (_SUCCESS): a crash during
@@ -196,7 +198,8 @@ def _finish(
         # legacy n_mentions count would otherwise re-run the mapInPandas
         # generation lineage up to 3x (CLAUDE.md: materialize frames
         # feeding multiple branches); n_mentions itself falls out of the
-        # already-collected per-partition rows for free
+        # already-collected per-partition rows for free. Caller-owned (no
+        # cache_scope): the returned PipelineResult.mentions reads it.
         mentions = mentions.persist()
         per_part = (
             _partition_metrics(mentions, "mentions")

@@ -96,6 +96,12 @@ def main() -> None:
     for name in ["region", "nation"]:
         pq.write_table(tables[name], os.path.join(args.out, f"{name}.parquet"))
 
+    # characters _noise_text inserts per document (one between every two
+    # 13-char chunks; none for NULL or empty text), computed once
+    text_len = pc.fill_null(
+        pc.utf8_length(tables["documents"]["text"]), 0).to_numpy()
+    inserted = np.where(text_len > 0, (text_len + 12) // 13 - 1, 0)
+
     for name, keys in key_map.items():
         t = tables[name]
         copies = []
@@ -109,14 +115,12 @@ def main() -> None:
                 elif name == "documents" and field == "text":
                     cols[field] = _noise_text(col.combine_chunks(), i)
                 elif name == "documents" and field == "n_chars" and i > 0:
-                    # keep n_chars consistent with the noised text
-                    nc = col.combine_chunks().to_numpy(zero_copy_only=False)
-                    lens = [len(x.as_py()) if x.as_py() is not None else 0
-                            for x in tables[name]["text"].combine_chunks()]
-                    extra = [(length + 12) // 13 - 1 if length > 0 else 0
-                             for length in lens]
-                    cols[field] = pa.array(
-                        (nc + np.asarray(extra)).astype("int64"))
+                    # keep n_chars consistent with the noised text; pc.add
+                    # keeps a NULL n_chars NULL (a numpy round trip turns
+                    # it into NaN, then into a garbage int64)
+                    cols[field] = pc.add(
+                        col.combine_chunks(),
+                        pa.array(inserted).cast(col.type))
                 elif name == "embeddings" and field == "embedding" and i > 0:
                     vecs = col.combine_chunks()
                     rolled = [

@@ -21,9 +21,7 @@ from typing import Any
 
 from generative_ner_spark.sources import synth
 from generative_ner_spark.sources.synth import LABELS2NAMES, SynthConfig
-from tests.reference_oracle import load_reference
-
-REF = load_reference()
+from tests.reference_oracle import REF
 NAMES2LABELS = {v: k for k, v in LABELS2NAMES.items()}
 
 

@@ -18,6 +18,7 @@ functions).
 
 from __future__ import annotations
 
+import functools
 import textwrap
 from pathlib import Path
 from types import SimpleNamespace
@@ -54,8 +55,18 @@ def _extract_def(path: Path, name: str) -> str:
     return textwrap.dedent(block)
 
 
+def require_reference() -> Path:
+    """The reference checkout directory; one clear error when it is absent."""
+    if not REF_DIR.is_dir():
+        raise FileNotFoundError(
+            f"reference checkout missing: {REF_DIR} is required by this test")
+    return REF_DIR
+
+
+@functools.lru_cache(maxsize=None)
 def load_reference() -> SimpleNamespace:
     """Namespace with the reference's pure functions, exec'd from source."""
+    require_reference()
     import ast as _ast
     import random as _random
     import re as _re
@@ -87,3 +98,15 @@ def load_reference() -> SimpleNamespace:
     # reference parse_output is a staticmethod that calls module-level parser;
     # both are now in ns, so the closure resolves.
     return SimpleNamespace(**{k: v for k, v in ns.items() if not k.startswith("__")})
+
+
+class _LazyReference:
+    """``REF.fn`` loads the reference on first attribute access, so a module
+    importing ``REF`` collects (and its reference-free tests run) without
+    the checkout; only tests that touch ``REF`` fail."""
+
+    def __getattr__(self, name: str) -> Any:
+        return getattr(load_reference(), name)
+
+
+REF = _LazyReference()

@@ -7,9 +7,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from generative_ner_spark.functions import textops
-from tests.reference_oracle import load_reference
+from tests.reference_oracle import REF
 
-REF = load_reference()
 
 BIO_CASES = [
     (["B-PER", "I-PER", "O"], [(0, 2, "PER")]),

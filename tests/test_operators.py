@@ -19,6 +19,7 @@ from generative_ner_spark.operators import (
 from generative_ner_spark.sources import conll, corpus
 from generative_ner_spark.sources.synth import LABELS2NAMES, SynthConfig
 from tests.reference_loop import NAMES2LABELS, REF
+from tests.reference_oracle import require_reference
 
 CONLL_SAMPLE = """-DOCSTART- -X- -X- O
 
@@ -791,7 +792,8 @@ class TestRunGptCli:
         budget come from the YAML, CLI flags still override."""
         from generative_ner_spark.sources.config import load_gpt_config
 
-        data, model = load_gpt_config("/root/reference/configs/config_gpt.yaml")
+        cfg_path = str(require_reference() / "configs/config_gpt.yaml")
+        data, model = load_gpt_config(cfg_path)
         assert model.model_name == "gpt-4o-mini-2024-07-18"
         assert (model.k, model.n, model.top_p, model.total_cost_limit) == \
             (2, 1, 0.9, 1.0)
@@ -800,14 +802,14 @@ class TestRunGptCli:
                                      "LOC": "location", "MISC": "miscellaneous"}
         assert data.system_prompt is None
         rc, out = self._run(
-            ["-c", "/root/reference/configs/config_gpt.yaml",
+            ["-c", cfg_path,
              "--input", "synth:10", "-o", str(tmp_path / "cfg")], capsys)
         assert rc == 0
         assert out[0]["mode"] == "estimate"
         assert out[0]["prompts"] >= 40  # individual: 4-label fan-out
         # CLI override beats config: collective => one prompt per example
         rc2, out2 = self._run(
-            ["-c", "/root/reference/configs/config_gpt.yaml",
+            ["-c", cfg_path,
              "--format", "collective", "--k", "0",
              "--input", "synth:10", "-o", str(tmp_path / "cfg2")], capsys)
         assert rc2 == 0 and out2[0]["prompts"] < out[0]["prompts"]
@@ -966,7 +968,7 @@ class TestCost:
         import importlib.util
 
         spec = importlib.util.spec_from_file_location(
-            "ref_cost", "/root/reference/src/gpt/cost.py")
+            "ref_cost", require_reference() / "src/gpt/cost.py")
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
         return mod
@@ -4130,6 +4132,24 @@ class TestRandomWalks:
         assert sorted(r.step for r in rows if r.start_node == 1) == [0, 1, 2]
 
 
+def _cache_empty(spark) -> bool:
+    """True iff no frame is registered in the session's cache manager."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+class TestCacheScope:
+    def test_raise_inside_scope_releases(self, spark):
+        from generative_ner_spark.operators.cache import cache_scope
+
+        spark.catalog.clearCache()
+        with pytest.raises(RuntimeError, match="boom"):
+            with cache_scope() as keep:
+                keep(spark.range(10)).count()
+                assert not _cache_empty(spark)
+                raise RuntimeError("boom")
+        assert _cache_empty(spark)
+
+
 class TestGraphComponents:
     def test_two_components_min_label(self, spark):
         from generative_ner_spark.operators import graph
@@ -4173,6 +4193,15 @@ class TestLabelPropagation:
         # the separate pair swaps labels each round; after odd rounds
         # each holds the other's id (pure determinism, no damping)
         assert got[10] == 11 and got[11] == 10
+
+    def test_string_ids_fail_fast(self, spark):
+        from generative_ner_spark.operators import graph
+
+        spark.catalog.clearCache()
+        e = spark.createDataFrame([("a", "b")], "src string, dst string")
+        with pytest.raises(ValueError, match="integral"):
+            graph.label_propagation(e)
+        assert _cache_empty(spark)
 
 
 class TestFuzzyDupClusters:
@@ -4762,6 +4791,13 @@ class TestHits:
         edges = spark.createDataFrame([], "src string, dst string")
         assert graph.hits(edges).count() == 0
 
+    def test_empty_graph_releases_cache(self, spark):
+        from generative_ner_spark.operators import graph
+
+        spark.catalog.clearCache()
+        graph.hits(spark.createDataFrame([], "src string, dst string"))
+        assert _cache_empty(spark)
+
 
 class TestClusteringCoefficient:
     def test_triangle_plus_pendant(self, spark):
@@ -5152,8 +5188,10 @@ class TestPersonalizedPagerank:
         edges = spark.createDataFrame(
             [("a", "b")], "src string, dst string")
         seeds = spark.createDataFrame([("zz",)], "node string")
+        spark.catalog.clearCache()
         with _pytest.raises(ValueError):
             graph.personalized_pagerank(edges, seeds)
+        assert _cache_empty(spark)
 
 
 class TestOovRate:
