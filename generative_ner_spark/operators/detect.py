@@ -103,6 +103,39 @@ def _check_prompt_format(prompt_format: str) -> None:
         )  # parity: preprocessor.py:116
 
 
+def _check_language(language: str) -> None:
+    """Driver-side language check, so every path fails at call time with
+    the reference message instead of later inside an executor."""
+    if language not in ("en", "ja"):  # parity: preprocessor.py:168
+        raise ValueError(
+            f"Unsupported language: {language}. Supported languages are 'ja' and 'en'."
+        )
+
+
+def _gold_tuples(gold) -> list[tuple[int, int, str]]:
+    """gold_spans array<struct> row value -> [(start, end, label)]."""
+    return [(g["start"], g["end"], g["label"]) for g in gold]
+
+
+def _target_messages(text: str, gold_spans: list[tuple[int, int, str]],
+                     prompt_format: str, language: str,
+                     system_prompt: str | None,
+                     labels2names: dict[str, str] = LABELS2NAMES) -> list[dict]:
+    """The collective/universal target turns, gold assistant turn last —
+    the ONE renderer behind both the cache key and render_prompts, so
+    the key and the submitted prompt cannot diverge."""
+    entity_list = sorted(
+        {(text[s:e], labels2names[lb]) for s, e, lb in gold_spans}
+    )
+    if prompt_format == "universal":
+        return textops.get_universal_prompt(text, entity_list, language,
+                                            system_prompt)
+    return textops.get_collective_prompt(
+        text, entity_list, list(labels2names.values()), language,
+        system_prompt,
+    )
+
+
 def _prompt_cache_key(text: str, gold_spans: list[tuple[int, int, str]],
                       prompt_format: str, language: str,
                       system_prompt: str | None = None) -> str:
@@ -115,17 +148,8 @@ def _prompt_cache_key(text: str, gold_spans: list[tuple[int, int, str]],
     key — which is exactly what makes checkpoint resume invalidate
     correctly.
     """
-    entity_list = sorted(
-        {(text[s:e], LABELS2NAMES[lb]) for s, e, lb in gold_spans}
-    )
-    if prompt_format == "universal":
-        messages = textops.get_universal_prompt(text, entity_list, language,
-                                                system_prompt)
-    else:
-        messages = textops.get_collective_prompt(
-            text, entity_list, list(LABELS2NAMES.values()), language,
-            system_prompt,
-        )
+    messages = _target_messages(text, gold_spans, prompt_format, language,
+                                system_prompt)
     joined = "\n".join(m["content"] for m in messages[:-1])
     return hashlib.md5(joined.encode()).hexdigest()
 
@@ -143,15 +167,14 @@ def with_prompt_hash(examples_with_golds: DataFrame,
     generations after a prompt-format/config change).
     """
     _check_prompt_format(prompt_format)
+    _check_language(language)
 
     @pandas_udf("string")
     def hash_udf(texts: pd.Series, golds: pd.Series) -> pd.Series:
         return pd.Series(
             [
-                _prompt_cache_key(
-                    t, [(g["start"], g["end"], g["label"]) for g in gs],
-                    prompt_format, language, system_prompt,
-                )
+                _prompt_cache_key(t, _gold_tuples(gs), prompt_format,
+                                  language, system_prompt)
                 for t, gs in zip(texts, golds)
             ]
         )
@@ -180,12 +203,13 @@ def generate_stub(examples_with_golds: DataFrame, cfg: SynthConfig,
     resume/cache key, shared with with_prompt_hash).
     """
     _check_prompt_format(prompt_format)
+    _check_language(language)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             gens, hashes = [], []
             for eid, text, gold in zip(pdf["example_id"], pdf["text"], pdf["gold_spans"]):
-                gold_spans = [(g["start"], g["end"], g["label"]) for g in gold]
+                gold_spans = _gold_tuples(gold)
                 hashes.append(
                     _prompt_cache_key(text, gold_spans, prompt_format,
                                       language, system_prompt)
@@ -214,40 +238,31 @@ _MENTION_SCHEMA = StructType(
 )
 
 
-def detect_mentions_fused(
-    examples_with_golds: DataFrame,
-    cfg: SynthConfig,
-    names2labels: dict[str, str] | None = None,
-) -> DataFrame:
-    """Single-pass prompt -> generate -> parse -> ground (one mapInPandas).
+_NAMES2LABELS = {v: k for k, v in LABELS2NAMES.items()}
 
-    Used when no generation checkpoint is requested: skips materializing the
-    intermediate generations frame, halving Arrow (de)serialization and one
-    Python-worker stage. Semantics identical to generate_stub |> ground
-    (pinned by tests/test_pipeline.py exact-parity test, which runs the
-    two-stage path).
+
+def _emit_mentions(frame: DataFrame, extra_cols: tuple[str, ...],
+                   spans) -> DataFrame:
+    """THE mention emitter: the one ``_MENTION_SCHEMA`` row loop behind
+    every public detect/ground function (one mapInPandas).
+
+    Each row zips (example_id, doc_id, span_offset, text) + ``extra_cols``;
+    ``spans(example_id, text, *extra)`` returns the row's grounded
+    (start, end, label) spans over its text. ``mention_norm`` (the
+    normalized matched surface) is the entity-linking join key.
     """
-    n2l = names2labels if names2labels is not None else {
-        v: k for k, v in LABELS2NAMES.items()
-    }
+    cols = ("example_id", "doc_id", "span_offset", "text") + extra_cols
+    names = _MENTION_SCHEMA.fieldNames()
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {k: [] for k in
-                    ("example_id", "doc_id", "span_offset", "start", "end",
-                     "label", "mention_norm")}
-            for eid, did, off, text, gold in zip(
-                pdf["example_id"], pdf["doc_id"], pdf["span_offset"],
-                pdf["text"], pdf["gold_spans"],
-            ):
-                gold_spans = [(g["start"], g["end"], g["label"]) for g in gold]
-                gen = synth.stub_generation_collective(
-                    str(eid), text, gold_spans, cfg
-                )
+            rows = {k: [] for k in names}
+            for eid, did, off, text, *extra in zip(*(pdf[c] for c in cols)):
+                found = spans(eid, text, *extra)
+                if not found:
+                    continue
                 lowered = text.lower()
-                for s, e, label in textops.spans_from_generation_collective(
-                    text, gen, n2l
-                ):
+                for s, e, label in found:
                     rows["example_id"].append(eid)
                     rows["doc_id"].append(did)
                     rows["span_offset"].append(off)
@@ -259,7 +274,31 @@ def detect_mentions_fused(
                     )
             yield pd.DataFrame(rows)
 
-    return examples_with_golds.mapInPandas(fn, _MENTION_SCHEMA)
+    return frame.mapInPandas(fn, _MENTION_SCHEMA)
+
+
+def detect_mentions_fused(
+    examples_with_golds: DataFrame,
+    cfg: SynthConfig,
+    names2labels: dict[str, str] | None = None,
+) -> DataFrame:
+    """Single-pass prompt -> generate -> parse -> ground (one mapInPandas).
+
+    Used when no generation checkpoint is requested: skips materializing the
+    intermediate generations frame, halving Arrow (de)serialization and one
+    Python-worker stage. Semantics identical to generate_stub |> ground
+    (pinned by tests/test_operators.py
+    TestFusedDetection::test_equals_generate_then_ground).
+    """
+    n2l = names2labels if names2labels is not None else _NAMES2LABELS
+
+    def spans(eid, text, gold):
+        gen = synth.stub_generation_collective(
+            str(eid), text, _gold_tuples(gold), cfg
+        )
+        return textops.spans_from_generation_collective(text, gen, n2l)
+
+    return _emit_mentions(examples_with_golds, ("gold_spans",), spans)
 
 
 def individual_label_order(
@@ -315,10 +354,7 @@ def detect_mentions_individual(
     Scale: the fan-out is a narrow explode (no shuffle); generation cost
     x N_labels is the reference's own cost model for this format.
     """
-    if language not in ("en", "ja"):  # parity: preprocessor.py:168
-        raise ValueError(
-            f"Unsupported language: {language}. Supported languages are 'ja' and 'en'."
-        )
+    _check_language(language)
     l2n = labels2names or LABELS2NAMES
     if shuffle:
         import random as _random
@@ -347,35 +383,13 @@ def detect_mentions_individual(
             "label", F.explode(F.array(*[F.lit(x) for x in labels]))
         )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("example_id", "doc_id", "span_offset", "start", "end",
-                     "label", "mention_norm")}
-            for eid, did, off, text, gold, label in zip(
-                pdf["example_id"], pdf["doc_id"], pdf["span_offset"],
-                pdf["text"], pdf["gold_spans"], pdf["label"],
-            ):
-                gold_spans = [(g["start"], g["end"], g["label"]) for g in gold]
-                gen = synth.stub_generation_individual(
-                    str(eid), text, gold_spans, label, cfg
-                )
-                lowered = text.lower()
-                for s, e, lb in textops.spans_from_generation_individual(
-                    text, gen, label
-                ):
-                    rows["example_id"].append(eid)
-                    rows["doc_id"].append(did)
-                    rows["span_offset"].append(off)
-                    rows["start"].append(s)
-                    rows["end"].append(e)
-                    rows["label"].append(lb)
-                    rows["mention_norm"].append(
-                        textops.normalize_answer(lowered[s:e])
-                    )
-            yield pd.DataFrame(rows)
+    def spans(eid, text, gold, label):
+        gen = synth.stub_generation_individual(
+            str(eid), text, _gold_tuples(gold), label, cfg
+        )
+        return textops.spans_from_generation_individual(text, gen, label)
 
-    return fanned.mapInPandas(fn, _MENTION_SCHEMA)
+    return _emit_mentions(fanned, ("gold_spans", "label"), spans)
 
 
 _PROMPT_SCHEMA = (
@@ -422,14 +436,9 @@ def render_prompts(
     they don't have — we splice demos systemlessly (d[:2]/d[2:]), which is
     what that code plainly intends.
     """
-    if prompt_format not in ("collective", "universal", "individual"):
-        raise NotImplementedError(
-            f"Format '{prompt_format}' is not implemented."
-        )  # parity: preprocessor.py:116
-    if language not in ("en", "ja"):
-        raise ValueError(
-            f"Unsupported language: {language}. Supported languages are 'ja' and 'en'."
-        )
+    if prompt_format != "individual":
+        _check_prompt_format(prompt_format)
+    _check_language(language)
     from generative_ner_spark.operators import demos as demos_mod
 
     demo_list = demos or []
@@ -454,7 +463,7 @@ def render_prompts(
                 pdf["example_id"], pdf["doc_id"], pdf["span_offset"],
                 pdf["text"], pdf["gold_spans"],
             ):
-                gold_spans = [(g["start"], g["end"], g["label"]) for g in gold]
+                gold_spans = _gold_tuples(gold)
                 if prompt_format == "individual":
                     per_label = []
                     for lb in labels:
@@ -474,18 +483,10 @@ def render_prompts(
                         )
                         emit(eid, did, off, text, lb, gold_output, spliced)
                 else:
-                    entity_list = sorted(
-                        {(text[s:e], l2n[lb]) for s, e, lb in gold_spans}
+                    messages = _target_messages(
+                        text, gold_spans, prompt_format, language,
+                        system_prompt, l2n,
                     )
-                    if prompt_format == "universal":
-                        messages = textops.get_universal_prompt(
-                            text, entity_list, language, system_prompt
-                        )
-                    else:
-                        messages = textops.get_collective_prompt(
-                            text, entity_list, list(l2n.values()), language,
-                            system_prompt,
-                        )
                     gold_output = messages[-1]["content"]
                     demo_turns = (
                         demos_mod.collective_demo_turns(demo_list, l2n, language)
@@ -516,79 +517,34 @@ def render_prompts(
 def ground_individual(generations: DataFrame) -> DataFrame:
     """Individual-format generations (with the queried ``label`` column) ->
     grounded mentions (pred.py:56-65: bare-string items only, span label =
-    the queried label)."""
+    the queried label). A null generation (failed row, error column set)
+    grounds nothing."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("example_id", "doc_id", "span_offset", "start", "end",
-                     "label", "mention_norm")}
-            for eid, did, off, text, label, gen in zip(
-                pdf["example_id"], pdf["doc_id"], pdf["span_offset"],
-                pdf["text"], pdf["label"], pdf["generated_text"],
-            ):
-                if gen is None:
-                    continue  # failed generation row (error column set)
-                lowered = text.lower()
-                for s, e, lb in textops.spans_from_generation_individual(
-                    text, gen, label
-                ):
-                    rows["example_id"].append(eid)
-                    rows["doc_id"].append(did)
-                    rows["span_offset"].append(off)
-                    rows["start"].append(s)
-                    rows["end"].append(e)
-                    rows["label"].append(lb)
-                    rows["mention_norm"].append(
-                        textops.normalize_answer(lowered[s:e])
-                    )
-            yield pd.DataFrame(rows)
+    def spans(eid, text, label, gen):
+        if gen is None:
+            return ()
+        return textops.spans_from_generation_individual(text, gen, label)
 
-    return generations.mapInPandas(fn, _MENTION_SCHEMA)
+    return _emit_mentions(generations, ("label", "generated_text"), spans)
 
 
 def ground(generations: DataFrame, names2labels: dict[str, str] | None = None) -> DataFrame:
     """Generations -> grounded mentions (one row per (start, end, label)).
 
     Parse/filter/ground parity: textops.spans_from_generation_collective
-    (reference pred.py:43-55). ``mention_norm`` (the normalized matched
-    surface) is the entity-linking join key.
+    (reference pred.py:43-55). A null generation (e.g. an OpenAI batch
+    error line read back as null) grounds nothing, same contract as
+    ground_individual, instead of raising inside parse_output and killing
+    the whole job.
     """
-    n2l = names2labels if names2labels is not None else {
-        v: k for k, v in LABELS2NAMES.items()
-    }
+    n2l = names2labels if names2labels is not None else _NAMES2LABELS
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("example_id", "doc_id", "span_offset", "start", "end",
-                     "label", "mention_norm")}
-            for eid, did, off, text, gen in zip(
-                pdf["example_id"], pdf["doc_id"], pdf["span_offset"],
-                pdf["text"], pdf["generated_text"],
-            ):
-                if gen is None:
-                    # failed-generation row (e.g. an OpenAI batch error
-                    # line read back as null): skip, same contract as
-                    # ground_individual — a None here used to raise
-                    # inside parse_output and kill the whole job
-                    continue
-                lowered = text.lower()
-                for s, e, label in textops.spans_from_generation_collective(
-                    text, gen, n2l
-                ):
-                    rows["example_id"].append(eid)
-                    rows["doc_id"].append(did)
-                    rows["span_offset"].append(off)
-                    rows["start"].append(s)
-                    rows["end"].append(e)
-                    rows["label"].append(label)
-                    rows["mention_norm"].append(
-                        textops.normalize_answer(lowered[s:e])
-                    )
-            yield pd.DataFrame(rows)
+    def spans(eid, text, gen):
+        if gen is None:
+            return ()
+        return textops.spans_from_generation_collective(text, gen, n2l)
 
-    return generations.mapInPandas(fn, _MENTION_SCHEMA)
+    return _emit_mentions(generations, ("generated_text",), spans)
 
 
 def prune_contained_mentions(mentions: DataFrame) -> DataFrame:

@@ -16,9 +16,10 @@ cache (/root/reference/src/gpt/utils.py:64-101, openai_api.py:258-265),
 generalized to a table. With an Iceberg catalog the same table is an Iceberg
 table and the manifest is a snapshot.
 
-Metrics (north rule "per-partition lineage + metrics"): each stage's row
-count per spark_partition_id is written next to the sink — cheap
-(groupBy(partition_id).count() piggybacks on data already materialized).
+Metrics (north rule "per-partition lineage + metrics"): with
+``collect_metrics=True`` each stage's row count per spark_partition_id is
+written next to the sink, at one extra Spark job per counted frame
+(mentions, triples: a groupBy(partition_id).count() each).
 """
 
 from __future__ import annotations
@@ -79,11 +80,9 @@ def run_pipeline(
     testdata_kg.examples_with_golds)."""
     cfg = cfg or SynthConfig()
     detect._check_prompt_format(prompt_format)  # parity: preprocessor.py:116
-    if language not in ("en", "ja"):
-        # fail FAST and identically on both paths: the fused path never
-        # touches language (stub mentions are language-blind) while the
-        # resume path raised late inside an executor during generation
-        raise ValueError(f"Unsupported language: {language}")
+    # fail fast and identically on both paths: the fused path never
+    # touches language (stub mentions are language-blind)
+    detect._check_language(language)
     t0 = time.time()
 
     if examples_with_golds is not None:
@@ -92,92 +91,59 @@ def run_pipeline(
         examples = detect.explode_text_spans(docs)
         examples = detect.attach_golds(examples, golds)
 
-    # ---- generation with checkpoint resume (prompt-hash anti-join) -------
-    gen_ckpt = os.path.join(checkpoint_dir, "generations") if checkpoint_dir else None
-    if gen_ckpt is None:
+    if not checkpoint_dir:
         # no resume requested: fuse prompt->generate->parse->ground into one
         # Arrow pass (skips materializing the generations frame entirely)
         mentions = detect.detect_mentions_fused(examples, cfg)
-        return _finish(spark, mentions, alias_df, entities_df, sink_path,
-                       collect_metrics, t0, canonical_df)
-    # The checkpoint is a (prompt_hash -> generated_text) response cache, the
-    # reference's md5-of-prompt cache as a table (src/gpt/utils.py:64-101,
-    # openai_api.py:258-265). Keying on prompt_hash (NOT example_id) means a
-    # changed prompt_format / language / label set MISSES and regenerates,
-    # and the final join serves ONLY the current input's examples — a resume
-    # with a shrunken input never emits stale mentions.
-    # persist + materialize the hashed frame BEFORE generation: it feeds
-    # two jobs (the checkpoint write and the final serve join) — without
-    # this the Python render+hash pass re-executed per job AND fused with
-    # the generation mapInPandas in one task (two chained CPU-bound
-    # python stages oversubscribe workers 2x, the CLAUDE.md gotcha).
-    # Caller-owned, not a cache_scope: the returned lazy frames read it, and
-    # a release would re-render every prompt on each repeated run_pipeline.
-    hashed = detect.with_prompt_hash(examples, prompt_format, language).persist()
-    hashed.count()
-    # resume only from a COMMITTED checkpoint (_SUCCESS): a crash during
-    # the first write leaves a directory with only _temporary/ — the bare
-    # exists() test then made every re-run fail on an unreadable parquet
-    # dir, permanently breaking the resume feature whose purpose is crash
-    # recovery
-    if os.path.exists(os.path.join(gen_ckpt, "_SUCCESS")):
-        cached_hashes = spark.read.parquet(gen_ckpt).select("prompt_hash").distinct()
-        pending = hashed.join(cached_hashes, "prompt_hash", "left_anti")
-        fresh = detect.generate_stub(pending, cfg, prompt_format, language)
-        fresh.write.mode("append").parquet(gen_ckpt)
     else:
-        fresh = detect.generate_stub(hashed, cfg, prompt_format, language)
-        fresh.write.mode("overwrite").parquet(gen_ckpt)
-    # dedupe identical prompts deterministically (min example_id wins — the
-    # reference cache likewise serves ONE response per distinct prompt)
-    responses = (
-        spark.read.parquet(gen_ckpt)
-        .groupBy("prompt_hash")
-        .agg(
-            F.min(F.struct(F.col("example_id").alias("eid"),
-                           F.col("generated_text").alias("g")))
-            .getField("g").alias("generated_text")
+        # The checkpoint is a (prompt_hash -> generated_text) response
+        # cache, the reference's md5-of-prompt cache as a table
+        # (src/gpt/utils.py:64-101, openai_api.py:258-265). Keying on
+        # prompt_hash (NOT example_id) means a changed prompt_format /
+        # language / label set MISSES and regenerates, and the final join
+        # serves ONLY the current input's examples — a resume with a
+        # shrunken input never emits stale mentions.
+        gen_ckpt = os.path.join(checkpoint_dir, "generations")
+        # persist + materialize the hashed frame BEFORE generation: it feeds
+        # two jobs (the checkpoint write and the final serve join) — without
+        # this the Python render+hash pass re-executed per job AND fused with
+        # the generation mapInPandas in one task (two chained CPU-bound
+        # python stages oversubscribe workers 2x, the CLAUDE.md gotcha).
+        # Caller-owned, not a cache_scope: the returned lazy frames read it,
+        # and a release would re-render every prompt on each repeated run.
+        hashed = detect.with_prompt_hash(examples, prompt_format, language).persist()
+        hashed.count()
+        # resume only from a COMMITTED checkpoint (_SUCCESS): a crash during
+        # the first write leaves a directory with only _temporary/ — the
+        # bare exists() test then made every re-run fail on an unreadable
+        # parquet dir, permanently breaking crash recovery
+        if os.path.exists(os.path.join(gen_ckpt, "_SUCCESS")):
+            cached_hashes = spark.read.parquet(gen_ckpt).select("prompt_hash").distinct()
+            pending = hashed.join(cached_hashes, "prompt_hash", "left_anti")
+            fresh = detect.generate_stub(pending, cfg, prompt_format, language)
+            fresh.write.mode("append").parquet(gen_ckpt)
+        else:
+            fresh = detect.generate_stub(hashed, cfg, prompt_format, language)
+            fresh.write.mode("overwrite").parquet(gen_ckpt)
+        # dedupe identical prompts deterministically (min example_id wins —
+        # the reference cache likewise serves ONE response per prompt)
+        responses = (
+            spark.read.parquet(gen_ckpt)
+            .groupBy("prompt_hash")
+            .agg(
+                F.min(F.struct(F.col("example_id").alias("eid"),
+                               F.col("generated_text").alias("g")))
+                .getField("g").alias("generated_text")
+            )
         )
-    )
-    generations = hashed.join(responses, "prompt_hash")
+        mentions = detect.ground(hashed.join(responses, "prompt_hash"))
 
-    mentions = detect.ground(generations)
-    return _finish(spark, mentions, alias_df, entities_df, sink_path,
-                   collect_metrics, t0, canonical_df)
-
-
-def _finish(
-    spark: SparkSession,
-    mentions: DataFrame,
-    alias_df: DataFrame,
-    entities_df: DataFrame,
-    sink_path: str | None,
-    collect_metrics: bool,
-    t0: float,
-    canonical_df: DataFrame | None = None,
-) -> PipelineResult:
-    """Shared tail: link -> canonicalize -> triples -> sink/metrics."""
-    # ---- linking: broadcast dict join ------------------------------------
-    linked = linking.link_mentions(mentions, alias_df, dict_broadcast=True)
-    # materialize_triples reads linked exactly ONCE (fused single-groupBy
-    # design), so no persist is needed on the hot path; callers that re-use
-    # res.linked / res.mentions (tests, metrics) pay recompute or persist
-    # themselves.
-
-    # ---- canonicalization over the (small) entity dimension --------------
     # canonical_df only depends on the entity dimension, never on the docs:
     # production runs compute it once per catalog version and reuse it
     # across every pipeline run (pass it in); recomputing per run is the
     # fallback for ad-hoc invocations.
     canon = canonical_df if canonical_df is not None else canonicalize.canonical_map(entities_df)
-    # nil entities are their own canonical id — union them in lazily via
-    # coalesce after a broadcast join (canon map is dimension-sized)
-    linked = (
-        linked.join(F.broadcast(canon), "entity_id", "left")
-        .withColumn("canonical_id", F.coalesce("canonical_id", "entity_id"))
-    )
-
-    trip = triples.materialize_triples(linked)
+    linked, trip = link_to_triples(mentions, alias_df, canon)
 
     metrics: dict = {"wall_sec": None}
     if sink_path:
@@ -222,3 +188,22 @@ def _finish(
 
     return PipelineResult(mentions=mentions, linked=linked, triples=trip,
                           metrics=metrics)
+
+
+def link_to_triples(mentions: DataFrame, alias_df: DataFrame,
+                    canon: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The shared KG tail after detection — broadcast dict link ->
+    broadcast canonical join -> triples — used by run_pipeline and the
+    streaming micro-batch. Returns (linked, triples), both lazy."""
+    # nil entities are their own canonical id — union them in lazily via
+    # coalesce after a broadcast join (canon map is dimension-sized).
+    # materialize_triples reads linked exactly ONCE (fused single-groupBy
+    # design), so no persist is needed on the hot path; callers that re-use
+    # res.linked / res.mentions (tests, metrics) pay recompute or persist
+    # themselves.
+    linked = (
+        linking.link_mentions(mentions, alias_df, dict_broadcast=True)
+        .join(F.broadcast(canon), "entity_id", "left")
+        .withColumn("canonical_id", F.coalesce("canonical_id", "entity_id"))
+    )
+    return linked, triples.materialize_triples(linked)

@@ -4,10 +4,11 @@ The production input shape is the interleaved table (BASELINE.json
 input_hint); the driver's testdata ``documents`` is flat (doc_id BIGINT,
 text, lang, source, n_chars). This module adapts it deterministically:
 
-  * each row becomes one interleaved doc: text span at offset 0, plus a
-    media span at offset 1 for every 3rd doc (carry-through exercised),
-  * gold entities = whole-word matches of a fixed 6-term lexicon
-    (computed in the same Arrow batches that build the spans),
+  * each row becomes one example (its text span at offset 0) with gold
+    entities = whole-word matches of a fixed 6-term lexicon, computed in
+    the same Arrow batch (examples_with_golds); interleaved_docs gives
+    the same rows as interleaved docs, plus a media span at offset 1 for
+    every 3rd doc, for the media stages,
   * the stub generator runs NOISE-FREE, so the emitted mention set is a
     pure function of (text, lexicon) — which makes the mention counts
     SQL-expressible and DuckDB-checkable (__spark_entry__.oracle_sql:
@@ -26,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from generative_ner_spark import schema
-from generative_ner_spark.plans.pipeline import PipelineResult, run_pipeline
+from generative_ner_spark.operators import detect
+from generative_ner_spark.plans import pipeline
 from generative_ner_spark.plans.session import adaptive_min_partitions
 from generative_ner_spark.sources.synth import SynthConfig
 
@@ -53,7 +55,7 @@ LEXICON = {
 for _t_ in LEXICON:
     assert re.fullmatch(r"[a-z0-9_]+", _t_), (
         f"LEXICON term {_t_!r} must be lowercase word characters: the "
-        f"kg_mention_counts/kg_triples oracles and lexicon_golds assume "
+        f"kg_mention_counts/kg_triples oracles and _lexicon_matches assume "
         f"regex-literal equivalence")
 
 NOISELESS = SynthConfig(
@@ -94,12 +96,11 @@ _LEXICON_PATTERNS = {
 
 
 def _lexicon_matches(text: str) -> list[dict]:
-    """THE gold matcher, shared by lexicon_golds (resume path) and
-    examples_with_golds (fused path) so the two pipeline branches can
-    never silently desync. Matches run case-insensitively over the
-    ORIGINAL text — not over text.lower(), whose length can differ for
-    some Unicode characters (U+0130 lowercases to two code points),
-    which would shift every subsequent offset off the original document.
+    """THE gold matcher behind examples_with_golds. Matches run
+    case-insensitively over the ORIGINAL text — not over text.lower(),
+    whose length can differ for some Unicode characters (U+0130
+    lowercases to two code points), which would shift every subsequent
+    offset off the original document.
     Sorted (start, end, label) for deterministic gold_spans ordering."""
     golds = [
         {"start": m.start(), "end": m.end(), "label": LEXICON[term]}
@@ -108,27 +109,6 @@ def _lexicon_matches(text: str) -> list[dict]:
     ]
     golds.sort(key=lambda g: (g["start"], g["end"], g["label"]))
     return golds
-
-
-def lexicon_golds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-word lexicon matches as gold entities (Arrow batches)."""
-    flat = adaptive_min_partitions(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")).select("doc_id", "text")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "span_offset": [], "start": [], "end": [],
-                   "label": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                for g in _lexicon_matches(text):
-                    out["doc_id"].append(f"tdoc-{did}")
-                    out["span_offset"].append(0)
-                    out["start"].append(g["start"])
-                    out["end"].append(g["end"])
-                    out["label"].append(g["label"])
-            yield pd.DataFrame(out)
-
-    return flat.mapInPandas(fn, schema.GOLD_ENTITY_SCHEMA)
 
 
 def lexicon_alias_df(spark: SparkSession) -> DataFrame:
@@ -183,8 +163,6 @@ def examples_with_golds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def testdata_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mention-detection stages only (no linking/canonicalization jobs)."""
-    from generative_ner_spark.operators import detect
-
     return detect.detect_mentions_fused(
         examples_with_golds(spark, sf_dir), NOISELESS
     )
@@ -197,43 +175,17 @@ def testdata_mentions_individual(spark: SparkSession, sf_dir: str) -> DataFrame:
     are IDENTICAL to the collective path's — both ground every distinct gold
     surface of each label — letting the two formats share one SQL oracle.
     """
-    from generative_ner_spark.operators import detect
-
     return detect.detect_mentions_individual(
         examples_with_golds(spark, sf_dir), NOISELESS
     )
 
 
 def run_testdata_pipeline(spark: SparkSession, sf_dir: str,
-                          **kwargs) -> PipelineResult:
-    if kwargs.get("checkpoint_dir"):
-        # resume path needs the two-stage generation flow over the generic
-        # interleaved input
-        return run_pipeline(
-            spark,
-            interleaved_docs(spark, sf_dir),
-            lexicon_golds(spark, sf_dir),
-            lexicon_alias_df(spark),
-            lexicon_entities_df(spark),
-            NOISELESS,
-            **kwargs,
-        )
-    from generative_ner_spark.plans import pipeline as P
-    import time as _time
-
-    # the fast path must honor the SAME kwargs the resume path forwards
-    # to run_pipeline — silently dropping e.g. canonical_df would make
-    # the two branches canonicalize differently from identical arguments
-    known = {"sink_path", "collect_metrics", "canonical_df"}
-    extra = set(kwargs) - known
-    if extra:
-        raise TypeError(
-            f"run_testdata_pipeline fast path got unsupported kwargs "
-            f"{sorted(extra)}; pass checkpoint_dir to route through "
-            f"run_pipeline, which accepts the full surface")
-    mentions = testdata_mentions(spark, sf_dir)
-    return P._finish(
-        spark, mentions, lexicon_alias_df(spark), lexicon_entities_df(spark),
-        kwargs.get("sink_path"), kwargs.get("collect_metrics", False),
-        _time.time(), kwargs.get("canonical_df"),
+                          **kwargs) -> pipeline.PipelineResult:
+    """run_pipeline over the testdata corpus; ``kwargs`` go to run_pipeline
+    (checkpoint_dir, sink_path, collect_metrics, canonical_df, ...)."""
+    return pipeline.run_pipeline(
+        spark, None, None, lexicon_alias_df(spark), lexicon_entities_df(spark),
+        NOISELESS, examples_with_golds=examples_with_golds(spark, sf_dir),
+        **kwargs,
     )

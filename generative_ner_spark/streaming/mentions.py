@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from generative_ner_spark import schema
-from generative_ner_spark.operators import detect, linking, triples as T
+from generative_ner_spark.operators import detect
+from generative_ner_spark.plans import pipeline
 from generative_ner_spark.sources.synth import SynthConfig
 
 
@@ -56,16 +57,9 @@ def make_batch_processor(
             detect.explode_text_spans(batch_docs), golds
         )
         mentions = detect.detect_mentions_fused(examples, cfg)
-        linked = (
-            linking.link_mentions(mentions, alias_df)
-            .join(F.broadcast(canonical_df), "entity_id", "left")
-            .withColumn(
-                "canonical_id", F.coalesce("canonical_id", "entity_id")
-            )
-        )
+        _, trip = pipeline.link_to_triples(mentions, alias_df, canonical_df)
         (
-            T.materialize_triples(linked)
-            .withColumn("batch_id", F.lit(batch_id))
+            trip.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id", "pred")

@@ -71,6 +71,11 @@ for _ in range(trials):
     dt = time.time() - t0
     if best is None or dt < best:
         best = dt
+    # walks are md5-deterministic: every trial of a level must agree
+    # before the two levels are compared
+    assert fp is None or (row["h"], row["n"]) == (fp, steps), (
+        f"trials differ within {master}: fp/n_steps {row['h']}/{row['n']} "
+        f"vs {fp}/{steps}")
     fp, steps = row["h"], row["n"]
 print("WALKRESULT " + json.dumps({
     "master": master, "n_edges": n_real_edges, "n_steps": steps,

@@ -2535,6 +2535,11 @@ class TestUniversalFormat:
             detect.generate_stub(ex, cfg, prompt_format="weird")
         with pytest.raises(NotImplementedError):
             detect.with_prompt_hash(ex, prompt_format="weird")
+        # an unknown language fails at call time, not inside an executor
+        with pytest.raises(ValueError, match="Unsupported language"):
+            detect.generate_stub(ex, cfg, language="de")
+        with pytest.raises(ValueError, match="Unsupported language"):
+            detect.with_prompt_hash(ex, language="de")
 
     def test_with_prompt_hash_matches_generate_stub(self, spark):
         """The resume anti-join key (with_prompt_hash) and the generation
@@ -2550,6 +2555,22 @@ class TestUniversalFormat:
                    detect.with_prompt_hash(ex, fmt, lang)
                    .select("example_id", "prompt_hash").collect()}
             assert got == want, (fmt, lang)
+
+
+class TestFusedDetection:
+    def test_equals_generate_then_ground(self, spark):
+        """detect_mentions_fused is generate_stub |> ground in one Arrow
+        pass: identical rows on all seven mention columns, stub noise
+        included."""
+        cfg = SynthConfig(n_docs=200, seed=7)
+        ex = corpus.synth_examples_with_golds(spark, cfg, num_partitions=4)
+        fused = detect.detect_mentions_fused(ex, cfg)
+        two_stage = detect.ground(detect.generate_stub(ex, cfg))
+        assert fused.schema == two_stage.schema
+        assert len(fused.columns) == 7
+        got = sorted(tuple(r) for r in fused.collect())
+        assert len(got) == 1530
+        assert got == sorted(tuple(r) for r in two_stage.collect())
 
 
 class TestRound5AdviceRegressions:

@@ -235,6 +235,39 @@ def test_resume_recovers_from_crashed_first_checkpoint_write(spark, tmp_path):
     assert spark.read.parquet(gen).count() == n_gen
 
 
+def test_testdata_resume_equals_fused(spark, tmp_path):
+    """run_testdata_pipeline's checkpointed path — a cold checkpoint write,
+    then a resume from the committed checkpoint — emits the same triples
+    as its fused path, over a flat documents table like the testdata's."""
+    from generative_ner_spark.plans import testdata_kg
+
+    terms = sorted(testdata_kg.LEXICON)
+    fillers = ["the", "Query", "scan", "of", "a", "rows,"]
+    rows = []
+    for i in range(90):
+        words = [terms[(i * k) % len(terms)] if (i + k) % 3 == 0
+                 else fillers[(i + k) % len(fillers)] for k in range(14)]
+        if i % 4 == 0:
+            words[1] = words[1].capitalize()  # matching is case-insensitive
+        rows.append((i, " ".join(words) + "."))
+    rows.append((90, "no lexicon term here"))
+    sf_dir = str(tmp_path / "sf")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        os.path.join(sf_dir, "documents.parquet"))
+
+    def triples_of(res):
+        return sorted(tuple(r) for r in res.triples.select(
+            "subj_id", "pred", "obj_id", "doc_id", "span_offset").collect())
+
+    fused = triples_of(testdata_kg.run_testdata_pipeline(spark, sf_dir))
+    assert fused
+    ckpt = str(tmp_path / "ckpt")
+    for _ in ("cold", "resume"):
+        res = testdata_kg.run_testdata_pipeline(spark, sf_dir,
+                                                checkpoint_dir=ckpt)
+        assert triples_of(res) == fused
+
+
 def test_ground_skips_null_generations(spark):
     """A failed-generation row (null generated_text — what an OpenAI batch
     error line reads back as) is SKIPPED by detect.ground, same contract
