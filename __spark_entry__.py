@@ -698,12 +698,11 @@ def q35_windowed_mention_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q36_first_seen_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the STREAMING first-seen dedup (shared fingerprint
-    derivation — streaming/mentions.py _fingerprinted): the corpus is
-    salted with hour-late byte-identical copies of the first 50 docs; the
-    operator must keep exactly the earliest (ingest_ts, doc_id) row per
-    fingerprint. TTL expiry/re-emission is streaming-only and pinned in
-    pytest."""
+    """First-seen exact dedup (streaming/mentions.py
+    first_seen_dedup_batch_replay, fingerprint from _fingerprinted): the
+    corpus is salted with hour-late byte-identical copies of the first 50
+    docs; the operator must keep exactly the earliest (ingest_ts, doc_id)
+    row per fingerprint."""
     from generative_ner_spark.streaming import mentions as sm
 
     out = sm.first_seen_dedup_batch_replay(

@@ -35,7 +35,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from generative_ner_spark.operators.cache import cache_scope
 from generative_ner_spark.operators.tfidf import term_frequencies
 
 
@@ -47,12 +46,9 @@ def doc_lengths(tf: DataFrame) -> DataFrame:
 
 def _score_hits(hits: DataFrame, n, avgdl, id_col: str,
                 k1: float, b: float) -> DataFrame:
-    """Shared BM25 scoring tail: hits rows carrying (id, term, tf, dl,
-    df) -> (id_col, n_terms_hit, score). ``n``/``avgdl`` are Columns
-    (corpus-constants broadcast row) or literals (written-index
-    manifest). ONE home for the idf/contrib/agg block, so bm25_search
-    and probe_bm25_index can never drift apart (their score parity is
-    pinned by test)."""
+    """BM25 scoring tail: hits rows carrying (id, term, tf, dl, df) ->
+    (id_col, n_terms_hit, score). ``n``/``avgdl`` are Columns from the
+    corpus-constants broadcast row."""
     idf = F.log(1.0 + (n - F.col("df") + 0.5) / (F.col("df") + 0.5))
     contrib = F.round(
         idf * F.col("tf") * (k1 + 1)
@@ -128,109 +124,6 @@ def bm25_search(
     score, rank). Ties break on id asc (total order, reproducible
     cross-engine); orderBy+limit plans as TakeOrderedAndProject."""
     scored = bm25_scores(df, query_terms, id_col, text_col, k1, b)
-    return _topk_ranked(scored, id_col, top_k)
-
-
-# --------------------------------------------------------------------------
-# Written, term-bucketed index: the 100 TB probe path (same family as the
-# written LSH/IVF indexes in similarity.py — build once, partition-pruned
-# probes forever).
-# --------------------------------------------------------------------------
-
-from dataclasses import dataclass  # noqa: E402
-
-_MANIFEST = "_bm25_manifest.json"
-
-
-@dataclass
-class WrittenBm25Index:
-    df: DataFrame          # (id, term, tf, dl, _bucket) — _bucket from dirs
-    n_docs: int
-    total_tokens: int
-    n_buckets: int
-    id_col: str
-
-
-def write_bm25_index(df: DataFrame, path: str, id_col: str = "doc_id",
-                     text_col: str = "text", n_buckets: int = 64) -> None:
-    """Persist the inverted statistics for PARTITION-PRUNED BM25 probes.
-
-    Rows are (id, term, tf, dl) — dl denormalized onto every posting so a
-    probe needs no second table — written ``partitionBy(_bucket)`` where
-    ``_bucket = pmod(xxhash64(term), n_buckets)``. A probe computes its
-    query terms' buckets and reads exactly those directories: FILE-level
-    pruning, like write_lsh_index/write_ivf_index. Per-term document
-    frequencies are NOT stored: df(t) is the posting count of t, which
-    the probe recovers for free from the (complete) bucket rows it reads.
-
-    The corpus constants (n_docs, total tokens) ride a JSON manifest so a
-    later session probes without touching the corpus.
-    """
-    import json
-    import os
-
-    # tf feeds THREE consumers (the manifest scalars, doc_lengths, and
-    # the postings write) across TWO actions — persist it or the
-    # tokenize+shuffle aggregation re-runs per action (a full duplicate
-    # corpus pass at the scale this index exists for)
-    with cache_scope() as keep:
-        tf = keep(term_frequencies(df, id_col, text_col))
-        meta = df.select(F.count("*")).crossJoin(
-            tf.select(F.coalesce(F.sum("tf"), F.lit(0)))).first()
-        postings = tf.join(doc_lengths(tf), "id").withColumn(
-            "_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-        postings.write.partitionBy("_bucket").mode("overwrite").parquet(path)
-    manifest = {"n_docs": int(meta[0]), "total_tokens": int(meta[1]),
-                "n_buckets": n_buckets, "id_col": id_col}
-    with open(os.path.join(path, _MANIFEST), "w") as f:
-        json.dump(manifest, f)
-
-
-def read_bm25_index(spark, path: str) -> WrittenBm25Index:
-    """Reload a written BM25 index (see write_bm25_index). ``_bucket``
-    comes back from the directory layout, so probe filters prune at the
-    FILE level."""
-    import json
-    import os
-
-    with open(os.path.join(path, _MANIFEST)) as f:
-        m = json.load(f)
-    return WrittenBm25Index(spark.read.parquet(path), m["n_docs"],
-                            m["total_tokens"], m["n_buckets"], m["id_col"])
-
-
-def probe_bm25_index(
-    windex: WrittenBm25Index,
-    query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_k: int = 10,
-) -> DataFrame:
-    """Top-k BM25 over a written index — scores identical to
-    bm25_search on the source corpus (pinned by test). The query terms'
-    buckets are computed with the SAME xxhash64 in a |query|-row driver
-    job, then pushed as a literal ``_bucket IN (...)`` partition filter:
-    the probe reads only those directories, never the full index."""
-    terms = sorted({t.lower() for t in query_terms if t})
-    if not terms:
-        raise ValueError("query_terms must contain at least one term")
-    spark = windex.df.sparkSession
-    buckets = sorted({
-        r[0] for r in spark.createDataFrame(
-            [(t,) for t in terms], "term string"
-        ).select(
-            F.pmod(F.xxhash64("term"), F.lit(windex.n_buckets))
-        ).collect()
-    })
-    hits = windex.df.where(
-        F.col("_bucket").isin(buckets) & F.col("term").isin(terms))
-    dfreq = hits.groupBy("term").agg(F.count("*").alias("df"))
-    id_col = windex.id_col
-    scored = _score_hits(
-        hits.join(F.broadcast(dfreq), "term"),
-        F.lit(windex.n_docs),
-        F.lit(windex.total_tokens / windex.n_docs),
-        id_col, k1, b)
     return _topk_ranked(scored, id_col, top_k)
 
 

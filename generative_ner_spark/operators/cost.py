@@ -1,21 +1,19 @@
-"""Cost estimation + budget abort (S29/S30).
+"""Cost estimation (S29).
 
 Reference: src/gpt/cost.py — per-model $/1k-token tables, tiktoken counting,
-Batch-API halving, running-total budget abort (CostError at
-total >= limit, cost.py:219-221). Re-expressed as:
+Batch-API halving. Re-expressed as:
 
-* token counting as a COLUMN: tiktoken if importable (worker-side, exact),
-  else the public ~4-chars/token heuristic — one narrow projection;
+* token counting as a COLUMN: the public ~4-chars/token heuristic — one
+  narrow projection;
 * cost as arithmetic columns from a driver-side price table (model prices
-  are the PUBLIC OpenAI list prices the reference also hardcodes);
-* budget enforcement at stage boundaries: Spark cannot cheaply abort
-  mid-stage, so the check runs between micro-batches/stages on the
-  aggregated total (cost.py:197-223 semantics, same default limit).
+  are the PUBLIC OpenAI list prices the reference also hardcodes).
+
+The running-total budget abort (S30, cost.py:197-223) is enforced at chunk
+boundaries by ``jobs/run_gpt_spark.generate_with_budget``.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -77,22 +75,10 @@ def resolve_model_prices(model: str) -> dict:
     )
 
 
-def _try_tiktoken():
-    try:
-        import tiktoken  # noqa: F401
-
-        return tiktoken
-    except ImportError:
-        return None
-
-
 def token_count_col(text_col: str) -> Column:
-    """Estimated token count column.
-
-    tiktoken is not importable JVM-side; when it IS available a pandas UDF
-    path would be exact — in this container it is absent, so the documented
-    ~4-chars-per-token heuristic applies (ceil(len/4), floor 1 for non-empty).
-    """
+    """Estimated token count column: the documented ~4-chars-per-token
+    heuristic (ceil(len/4), floor 1 for non-empty). tiktoken is not
+    importable JVM-side."""
     c = F.length(F.col(text_col))
     # NULL text (a failed generation) is 0 tokens, like empty: the old
     # greatest(NULL, 1) form billed every null-text row 1 phantom token
@@ -101,29 +87,6 @@ def token_count_col(text_col: str) -> Column:
     return F.when(c.isNull() | (c == 0), F.lit(0)).otherwise(
         F.ceil(c / 4.0).cast("long")
     )
-
-
-def exact_token_count_udf(model: str = "gpt-4o-mini-2024-07-18"):
-    """EXACT token counting as an Arrow pandas UDF via tiktoken (the
-    reference counts prompt tokens with tiktoken before estimating,
-    src/gpt/openai_api.py usage + cost.py). Raises ImportError when
-    tiktoken is absent (this container) — callers fall back to
-    token_count_col's documented chars/4 heuristic. The encoder is built
-    once per worker process, never per batch."""
-    import tiktoken  # ImportError here = caller falls back
-
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    _enc_cache: dict = {}
-
-    @pandas_udf("long")
-    def fn(texts: pd.Series) -> pd.Series:
-        if model not in _enc_cache:
-            _enc_cache[model] = tiktoken.encoding_for_model(model)
-        enc = _enc_cache[model]
-        return texts.map(lambda t: len(enc.encode(t)) if t else 0)
-
-    return fn
 
 
 def count_fee(prompt_tokens: int, completion_tokens: int, model: str,
@@ -174,25 +137,3 @@ def with_cost_estimate(
 def total_cost(df_with_cost: DataFrame) -> float:
     row = df_with_cost.agg(F.sum("usd_cost").alias("usd")).collect()[0]
     return float(row["usd"] or 0.0)
-
-
-class CostBudget:
-    """Running-total budget with abort (cost.py:197-223 semantics).
-
-    ``charge`` is called at stage boundaries with that stage's aggregated
-    USD; raises CostError once the running total reaches the limit
-    (estimate-only mode skips the abort, like the reference's
-    mode='estimate')."""
-
-    def __init__(self, limit_usd: float = 1.0, estimate_only: bool = False):
-        self.limit = limit_usd
-        self.estimate_only = estimate_only
-        self.total = 0.0
-
-    def charge(self, usd: float) -> float:
-        self.total += usd
-        if not self.estimate_only and self.total >= self.limit:
-            raise CostError(
-                f"cost budget exceeded: ${self.total:.4f} >= ${self.limit:.4f}"
-            )
-        return self.total

@@ -1,6 +1,6 @@
 """Deduplication operators over a document corpus — the training-data staples.
 
-Four families, each with the 100 TB rationale spelled out:
+Three families, each with the 100 TB rationale spelled out:
 
 * exact        — groupBy(md5(normalized text)): one shuffle on a uniformly
                  distributed hash key; no skew possible, map-side combine.
@@ -11,8 +11,6 @@ Four families, each with the 100 TB rationale spelled out:
 * SimHash      — 64-bit signature via sign-aggregated token hashes; near-dup
                  = small Hamming distance. Signature build is one narrow
                  projection; banding on 4x16-bit chunks finds candidates.
-* n-gram Jaccard — exact verification metric (used by LSH verify); also
-                 exposed standalone for small candidate sets.
 
 Embedding-cosine near-dup lives in similarity.py (same LSH-bucket shape).
 """
@@ -28,7 +26,6 @@ from generative_ner_spark.operators.canonicalize import (
     capped_self_join_pairs,
     lsh_candidate_pairs,
     shingle_band_rows,
-    with_shingles,
 )
 from generative_ner_spark.operators.quality import fingerprint_col
 
@@ -45,15 +42,6 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
         .groupBy("fingerprint")
         .agg(F.count("*").alias("n_docs"), F.min("id").alias("keep_id"))
     )
-
-
-def dedup_exact(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """df minus exact duplicates (keeps min-id representative per group)."""
-    keep = exact_duplicates(df, id_col, text_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
 
 
 def near_duplicate_pairs_minhash(
@@ -409,39 +397,6 @@ def remove_boilerplate_lines(
     return rebuilt.select(F.col("id").alias(id_col), text_col)
 
 
-def ngram_jaccard_pairs(
-    candidates: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """Exact n-gram Jaccard for given candidate pairs (a, b).
-
-    Join the (small) candidate table to doc texts twice, then array ops.
-    Use after any blocking stage; never call on a full cross product.
-    """
-    sh = with_shingles(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("nm")),
-        "nm", n=n,
-    ).select("id", "shingles")
-    out = (
-        candidates
-        .join(sh.select(F.col("id").alias("a"), F.col("shingles").alias("sh_a")), "a")
-        .join(sh.select(F.col("id").alias("b"), F.col("shingles").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
-        .select("a", "b", "jaccard")
-    )
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Incremental dedup: written MinHash index + batch probe
 # ---------------------------------------------------------------------------
@@ -480,7 +435,7 @@ def write_minhash_index(
     - ``banding/`` — (id, band, band_hash) partitioned by ``_bkt`` =
       pmod(band_hash, n_buckets): a small-batch probe prunes to the
       buckets its own band hashes touch (FILE-level, like the written
-      LSH/IVF/BM25 indexes); a large batch degrades gracefully to a
+      LSH/IVF indexes); a large batch degrades gracefully to a
       full scan of the banding table — which is ids+hashes only, a few
       dozen bytes/doc, never the corpus text.
     - ``shingles/`` — (id, shingles) partitioned by ``_sbkt`` =
@@ -511,7 +466,7 @@ def write_minhash_index(
             banded = (banded
                       .withColumn("_rn", F.row_number().over(w))
                       .where(F.col("_rn") <= max_bucket).drop("_rn"))
-        _write_minhash_layout(sh, banded, path, n_buckets, "overwrite")
+        _write_minhash_layout(sh, banded, path, n_buckets)
     n_capped = 0
     if max_bucket is not None:
         # both counts are parquet-metadata reads over the just-written
@@ -535,41 +490,8 @@ def write_minhash_index(
     return manifest
 
 
-def append_to_minhash_index(
-    new_df: DataFrame,
-    path: str,
-) -> None:
-    """Add a batch's banding rows + shingle sets to a written MinHash
-    index (same bucket-partitioned layout, ``mode=append``) — the
-    continuous-crawl loop: dedup a batch against the index, ACCEPT the
-    survivors, append them so the NEXT batch dedups against corpus +
-    all previously accepted batches, never recomputing history.
-
-    Signature parameters come from the manifest (a probe or append can
-    never drift from the index tuning). Appended ids must be disjoint
-    from everything already indexed (the dedup_against_index contract
-    upholds this when you append its survivors). The write-time
-    ``max_bucket`` cap is NOT re-applied across old+new postings — a
-    bucket can exceed the cap by the appended rows; rebuild the index
-    (write_minhash_index) when accumulated appends warrant re-capping.
-    """
-    import json
-    import os
-
-    with open(os.path.join(path, "_minhash_manifest.json")) as f:
-        m = json.load(f)
-    with cache_scope() as keep:
-        sh, banded = shingle_band_rows(
-            new_df, m["id_col"], m["text_col"], k=m["k"], bands=m["bands"],
-            n=m["shingle_n"], hash_family=m["hash_family"],
-            scheme=m["scheme"],
-        )
-        keep(sh)
-        _write_minhash_layout(sh, banded, path, m["n_buckets"], "append")
-
-
 def _write_minhash_layout(sh: DataFrame, banded: DataFrame, path: str,
-                          n_buckets: int, mode: str) -> None:
+                          n_buckets: int) -> None:
     """Write banding rows and shingle sets in the bucket-partitioned
     index layout (``banding/`` by ``_bkt``, ``shingles/`` by ``_sbkt``).
     Each side is repartitioned by its layout key before the partitioned
@@ -577,19 +499,19 @@ def _write_minhash_layout(sh: DataFrame, banded: DataFrame, path: str,
     sliver into every bucket directory — tasks x n_buckets tiny files
     whose open/commit overhead dominates the write locally and poisons
     every later probe's listing at scale; with it each bucket is one
-    file, on the first write and on every append."""
+    file."""
     import os
 
     (banded
      .withColumn("_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets)))
      .repartition(F.col("_bkt"))
-     .write.partitionBy("_bkt").mode(mode)
+     .write.partitionBy("_bkt").mode("overwrite")
      .parquet(os.path.join(path, "banding")))
     (sh
      .withColumn("_sbkt", F.pmod(F.xxhash64(F.col("id").cast("string")),
                                  F.lit(n_buckets)))
      .repartition(F.col("_sbkt"))
-     .write.partitionBy("_sbkt").mode(mode)
+     .write.partitionBy("_sbkt").mode("overwrite")
      .parquet(os.path.join(path, "shingles")))
 
 

@@ -63,8 +63,7 @@ def kmv_sketch(
     (group, hash) groupBy — the same shuffle an exact countDistinct
     pays once, after which the k-smallest election and the sketch fold
     run on the deduped slim frame. The payoff is downstream: the sketch
-    table is kilobytes per group and answers any UNION of groups /
-    snapshots via merge_kmv_sketches without touching the corpus again.
+    table is kilobytes per group.
     """
     hashed = (
         df.where(F.col(value_col).isNotNull())
@@ -84,39 +83,3 @@ def kmv_sketch(
         F.size("sketch").alias("n_kept"),
         _estimate(F.col("sketch"), k).alias("est_distinct"),
     )
-
-
-def merge_kmv_sketches(
-    sketches: DataFrame,
-    k: int,
-    group_col: str | None = None,
-    sketch_col: str = "sketch",
-) -> DataFrame:
-    """Merge sketch rows — across snapshots, shards, or (with
-    ``group_col=None``) ALL groups into one corpus-wide estimate —
-    without rescanning any data: union the hash sets, keep the k
-    smallest, re-estimate. Exact set algebra on deterministic hashes:
-    merging sketches of A and B gives byte-identically the sketch of
-    A ∪ B (pinned by test).
-
-    ``k`` must be the k the inputs were built with (a merge can only
-    LOWER resolution, never invent it)."""
-    exploded = sketches.select(
-        *([F.col(group_col)] if group_col else []),
-        F.explode(sketch_col).alias("_h"),
-    ).distinct()
-    if group_col:
-        w = Window.partitionBy(group_col).orderBy(F.col("_h").asc())
-    else:
-        w = Window.partitionBy(F.lit(1)).orderBy(F.col("_h").asc())
-    topk = exploded.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= k)
-    grouped = (topk.groupBy(group_col) if group_col
-               else topk.groupBy(F.lit(1).alias("_g")))
-    out = grouped.agg(F.sort_array(F.collect_list("_h")).alias("sketch"))
-    cols = ([F.col(group_col)] if group_col else []) + [
-        F.col("sketch"),
-        F.size("sketch").alias("n_kept"),
-        _estimate(F.col("sketch"), k).alias("est_distinct"),
-    ]
-    return out.select(*cols)

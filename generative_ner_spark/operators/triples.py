@@ -173,68 +173,6 @@ def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> Non
     )
 
 
-def write_triples_snapshot(triples: DataFrame, path: str) -> int:
-    """Append-only snapshot sink: the Iceberg-snapshot pattern, catalog-free.
-
-    Each call writes an IMMUTABLE new version dir ``path/v=N/`` (parquet
-    partitionBy(pred)) and then atomically swings ``_snapshots.json``
-    (write-temp + rename) to point at it. Readers resolve the manifest
-    first, so a crash mid-write never exposes a half-written version —
-    exactly Iceberg's snapshot-commit contract. Old versions stay readable
-    (time travel / rollback = read an older N). Returns the new version.
-
-    With a real Iceberg catalog this whole function is
-    ``df.writeTo(tbl).append()``; the north rule's "resumes from
-    Iceberg-snapshot checkpoints" maps to reading ``current`` here.
-    """
-    import json as _json
-    import os as _os
-
-    manifest_path = _os.path.join(path, "_snapshots.json")
-    manifest = {"current": 0, "history": []}
-    if _os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            manifest = _json.load(f)
-    # next version = above the manifest AND any orphaned v=N dir: a crash
-    # mid-write leaves a partial v=N the manifest never points at —
-    # without the dir scan every retry recomputed N, hit errorifexists,
-    # and the append-only sink was bricked until manual cleanup (readers
-    # were always safe; only WRITES deadlocked)
-    orphans = [
-        int(name.split("=", 1)[1])
-        for name in (_os.listdir(path) if _os.path.isdir(path) else [])
-        if name.startswith("v=") and name.split("=", 1)[1].isdigit()
-    ]
-    version = max([manifest["current"], *orphans], default=0) + 1
-    target = _os.path.join(path, f"v={version}")
-    triples.write.mode("errorifexists").partitionBy("pred").parquet(target)
-    n = triples.sparkSession.read.parquet(target).count()
-    manifest = {
-        "current": version,
-        "history": manifest["history"] + [{"version": version, "n_triples": n}],
-    }
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(manifest, f)
-    _os.replace(tmp, manifest_path)  # atomic commit
-    return version
-
-
-def read_triples_snapshot(spark, path: str, version: int | None = None) -> DataFrame:
-    """Read a snapshot (default: current) via the manifest — never by
-    listing dirs, so concurrent writers can't expose partial data."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_snapshots.json")) as f:
-        manifest = _json.load(f)
-    v = version if version is not None else manifest["current"]
-    versions = {h["version"] for h in manifest["history"]}
-    if v not in versions:
-        raise ValueError(f"snapshot v={v} not in manifest (have {sorted(versions)})")
-    return spark.read.parquet(_os.path.join(path, f"v={v}"))
-
-
 def negative_samples(
     positives: DataFrame,
     entities: DataFrame,

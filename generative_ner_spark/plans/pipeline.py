@@ -192,9 +192,9 @@ def run_pipeline(
 
 def link_to_triples(mentions: DataFrame, alias_df: DataFrame,
                     canon: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The shared KG tail after detection — broadcast dict link ->
-    broadcast canonical join -> triples — used by run_pipeline and the
-    streaming micro-batch. Returns (linked, triples), both lazy."""
+    """The KG tail after detection — broadcast dict link -> broadcast
+    canonical join -> triples. Its one caller is run_pipeline. Returns
+    (linked, triples), both lazy."""
     # nil entities are their own canonical id — union them in lazily via
     # coalesce after a broadcast join (canon map is dimension-sized).
     # materialize_triples reads linked exactly ONCE (fused single-groupBy

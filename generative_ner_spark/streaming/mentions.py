@@ -1,72 +1,18 @@
-"""Structured-Streaming variant of the mention-detection stage.
+"""Streaming windowed mention counts and first-seen document dedup.
 
 The reference is batch-only (no streaming code exists in the repo — verified
-in SURVEY.md §1.3), but the stage DAG was designed so detection runs under
-``foreachBatch`` unchanged: each micro-batch of interleaved documents goes
-through the SAME explode -> fused detect -> link -> triples plan and lands
-in the partitioned triple sink. Exactly-once-per-batch comes from the
-streaming checkpoint (offsets) + an IDEMPOTENT per-batch write: the sink is
-partitioned by (batch_id, pred) and written with dynamic partition
-overwrite, so a batch replayed after a failure rewrites exactly its own
-partitions instead of appending duplicates (a plain mode('append') would
-double the replayed batch — at-least-once, not exactly-once).
-
-At production scale this is the continuous-ingest path: readStream from the
-Iceberg/Kafka landing table, watermark on ingest time if late media spans
-must be reconciled (not needed for the reference's semantics — documents
-are immutable rows).
+in SURVEY.md §1.3). ``windowed_mention_counts_stream`` is the continuous-
+ingest stage: tumbling-window lexicon mention counts over a document stream,
+with a watermark bounding state. ``first_seen_dedup_batch_replay`` is the
+batch first-seen exact dedup of a document table keyed on a content
+fingerprint (q36). ``word_pattern`` is the whole-word lexicon regex shared
+with the q35 DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from generative_ner_spark import schema
-from generative_ner_spark.operators import detect
-from generative_ner_spark.plans import pipeline
-from generative_ner_spark.sources.synth import SynthConfig
-
-
-def stream_documents(spark: SparkSession, input_dir: str,
-                     max_files_per_trigger: int = 4) -> DataFrame:
-    """File-landing-zone source of interleaved docs (JSONL)."""
-    return (
-        spark.readStream.schema(schema.DOCUMENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
-    )
-
-
-def make_batch_processor(
-    golds: DataFrame,
-    alias_df: DataFrame,
-    canonical_df: DataFrame,
-    cfg: SynthConfig,
-    sink_dir: str,
-):
-    """foreachBatch body as a testable function: batch plan reused verbatim.
-
-    Idempotent per batch: dynamic partition overwrite on (batch_id, pred) —
-    a replay of batch N rewrites only batch N's partitions (exactly-once
-    sink contents under foreachBatch's at-least-once invocation)."""
-
-    def process(batch_docs: DataFrame, batch_id: int) -> None:
-        examples = detect.attach_golds(
-            detect.explode_text_spans(batch_docs), golds
-        )
-        mentions = detect.detect_mentions_fused(examples, cfg)
-        _, trip = pipeline.link_to_triples(mentions, alias_df, canonical_df)
-        (
-            trip.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "pred")
-            .parquet(sink_dir)
-        )
-
-    return process
 
 
 def word_pattern(term: str) -> str:
@@ -103,8 +49,7 @@ def windowed_mention_counts_stream(
     """STATEFUL streaming stage: tumbling-window mention counts with a
     watermark bounding state and defining late-data semantics.
 
-    Unlike the foreachBatch path (stateless per batch), this is a real
-    Structured-Streaming stateful aggregation: ``withWatermark`` +
+    A real Structured-Streaming stateful aggregation: ``withWatermark`` +
     ``groupBy(window(ts), label)``. Windows older than
     (max event time − delay) have their state EVICTED at the end of the
     batch in which the watermark crosses them — that is what makes
@@ -169,9 +114,9 @@ def windowed_mention_counts_stream(
 
 
 def _fingerprinted(docs: DataFrame, ts_col: str) -> DataFrame:
-    """Shared key derivation for the dedup stage and its batch replay:
-    (doc_id, ingest_ts, fingerprint = md5 of the normalized concatenated
-    text spans — the SAME key the batch exact-dedup operator uses)."""
+    """Key derivation for the first-seen dedup: (doc_id, ingest_ts,
+    fingerprint = md5 of the normalized concatenated text spans — the SAME
+    key the batch exact-dedup operator uses)."""
     from generative_ner_spark.operators.quality import fingerprint_col
 
     flat = docs.select(
@@ -198,16 +143,10 @@ def _fingerprinted(docs: DataFrame, ts_col: str) -> DataFrame:
 
 def first_seen_dedup_batch_replay(docs: DataFrame,
                                   ts_col: str = "ingest_ts") -> DataFrame:
-    """Deterministic BATCH twin of streaming_first_seen_dedup: same
-    fingerprint key (via the shared ``_fingerprinted`` derivation), same
-    output schema, first (ingest_ts, doc_id) occurrence per fingerprint
-    survives. This puts the dedup KEY and within-batch selection
-    semantics under the DuckDB driver oracle (q36). Two streaming-only
-    behaviors stay pinned by the streaming pytest suite instead: TTL
-    state expiry/re-emission, and cross-batch ARRIVAL ordering — the
-    stream keeps the first batch's row even if a later batch delivers an
-    earlier event-time row within the watermark, whereas this twin picks
-    the event-time-global minimum."""
+    """Deterministic first-seen exact dedup of a document table: per
+    fingerprint (``_fingerprinted``), the first (ingest_ts, doc_id)
+    occurrence survives, as (fingerprint, doc_id, ingest_ts) rows. The
+    dedup key and the selection are under the q36 DuckDB oracle."""
     from pyspark.sql import Window
 
     flat = _fingerprinted(docs, ts_col)
@@ -216,170 +155,4 @@ def first_seen_dedup_batch_replay(docs: DataFrame,
         flat.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select("fingerprint", "doc_id", "ingest_ts")
-    )
-
-
-def streaming_first_seen_dedup(
-    docs_stream: DataFrame,
-    ts_col: str = "ingest_ts",
-    watermark_delay: str = "10 minutes",
-    dedup_ttl_minutes: int = 30,
-) -> DataFrame:
-    """CUSTOM stateful streaming operator (applyInPandasWithState):
-    cross-micro-batch exact dedup of a document stream.
-
-    Emits only the FIRST occurrence of each fingerprint (md5 of the
-    normalized concatenated text spans — the same key the batch exact-dedup
-    operator uses — with a media-ref fallback key for media-only docs);
-    later arrivals of the same fingerprint are suppressed. Selection is
-    ARRIVAL-ordered across micro-batches (the streaming-native contract:
-    the first batch to see a fingerprint wins, earliest (event time,
-    doc_id) within that batch) — a late-but-in-watermark row in a LATER
-    batch does not retroactively replace the emitted row, unlike the
-    event-time-global batch twin (first_seen_dedup_batch_replay).
-    Per-fingerprint state self-expires via an EVENT-TIME timeout once the
-    watermark passes first_seen + ttl, so state is bounded by the distinct
-    documents per TTL window, never by stream lifetime — the property that
-    makes continuous ingest dedup feasible at 10^12-doc scale.
-
-    Timeout semantics (Spark contract, pinned in tests): a group's timeout
-    fires in a batch where the watermark has passed its timeout timestamp
-    AND the group received no data in that batch; the state is removed and
-    a later re-arrival of the same fingerprint is emitted again (dedup
-    "forgets" after the TTL, exactly like a TTL'd bloom/KV dedup layer).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    flat = (
-        _fingerprinted(docs_stream, ts_col)
-        # epoch ms computed JVM-SIDE: Arrow hands the python UDF a
-        # session-timezone-naive timestamp, so pandas .value would be
-        # off by the UTC offset on any non-UTC session — the timeout
-        # would land behind the watermark (query crash) or inflate TTL.
-        # NB: 'ingest_ts', not ts_col — _fingerprinted has already renamed
-        # the timestamp column (a non-default ts_col otherwise throws
-        # UNRESOLVED_COLUMN here, matching the withWatermark below)
-        .withColumn("_ts_ms", F.unix_millis(F.col("ingest_ts")))
-        .withWatermark("ingest_ts", watermark_delay)
-    )
-    ttl_ms = dedup_ttl_minutes * 60_000
-
-    def fn(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            # duplicate arrivals inside the TTL: suppressed WITHOUT
-            # consuming the arrow batches — in a dedup stream duplicates
-            # are the hot path, and materializing them just to discard
-            # would be pure wasted copy at ingest scale
-            return
-        import pandas as _pd
-
-        rows = _pd.concat(list(pdfs))
-        first = rows.sort_values(["_ts_ms", "doc_id"]).iloc[0]
-        first_ms = int(first["_ts_ms"])
-        state.update((first_ms,))
-        state.setTimeoutTimestamp(first_ms + ttl_ms)
-        yield _pd.DataFrame({
-            "fingerprint": [key[0]],
-            "doc_id": [first["doc_id"]],
-            "ingest_ts": [first["ingest_ts"]],
-        })
-
-    return flat.groupBy("fingerprint").applyInPandasWithState(
-        fn,
-        outputStructType="fingerprint string, doc_id string, "
-                         "ingest_ts timestamp",
-        stateStructType="first_seen_ms long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def streaming_throttle(
-    events_stream: DataFrame,
-    key_col: str = "user_id",
-    id_col: str = "event_id",
-    ts_col: str = "ingest_ts",
-    quiet_seconds: int = 3600,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """CUSTOM stateful streaming operator (applyInPandasWithState):
-    per-key event throttling — the STREAMING twin of
-    temporal.throttle_events ("emit at most one row per key per quiet
-    period"; the batch operator's identical island semantics sit under
-    the q91 DuckDB oracle). An event is emitted iff its key saw NO
-    event in the preceding ``quiet_seconds``; every event — emitted or
-    suppressed — advances the key's quiet clock (state = last SEEN
-    event time, the gap-island contract, exactly the batch twin's lag
-    comparison). Within a batch rows process in (event time, id)
-    order; across batches the contract is arrival-ordered, like
-    streaming_first_seen_dedup.
-
-    State bounding is SEMANTICS-FREE here (nicer than the dedup op's
-    TTL): the state times out once the watermark passes
-    last_seen + quiet — at which point ANY future arrival is
-    necessarily past the quiet period, so forgetting the key changes
-    no decision; state is bounded by keys active per quiet window.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    flat = (
-        events_stream.select(
-            F.col(key_col).cast("string").alias("key"),
-            F.col(id_col).cast("string").alias("event_id"),
-            F.col(ts_col).alias("ingest_ts"),
-        )
-        # epoch ms JVM-side — same Arrow-timezone hazard as the dedup op
-        .withColumn("_ts_ms", F.unix_millis(F.col("ingest_ts")))
-        .withWatermark("ingest_ts", watermark_delay)
-    )
-    quiet_ms = int(quiet_seconds) * 1000
-
-    def fn(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        import pandas as _pd
-
-        rows = _pd.concat(list(pdfs)).sort_values(["_ts_ms", "event_id"])
-        last = state.get[0] if state.exists else None
-        keep_idx = []
-        for idx, ts in zip(rows.index, rows["_ts_ms"]):
-            ts = int(ts)
-            if last is None or ts - last > quiet_ms:
-                keep_idx.append(idx)
-            last = ts  # suppressed events still advance the clock
-        state.update((int(last),))
-        state.setTimeoutTimestamp(int(last) + quiet_ms)
-        if keep_idx:
-            yield rows.loc[keep_idx, ["key", "event_id", "ingest_ts"]]
-
-    return flat.groupBy("key").applyInPandasWithState(
-        fn,
-        outputStructType="key string, event_id string, "
-                         "ingest_ts timestamp",
-        stateStructType="last_seen_ms long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def start_mention_stream(
-    docs_stream: DataFrame,
-    golds: DataFrame,
-    alias_df: DataFrame,
-    canonical_df: DataFrame,
-    cfg: SynthConfig,
-    sink_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """foreachBatch: batch plan reused verbatim per micro-batch."""
-    process = make_batch_processor(golds, alias_df, canonical_df, cfg, sink_dir)
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
